@@ -345,10 +345,13 @@ def sessionize(
     df: DataFrame, user_col: str, ts_col: str, order_col: str, gap_seconds: int = 1800
 ) -> DataFrame:
     """Assign session ids per user: a gap > gap_seconds starts a new
-    session (lag + running-sum pattern; one shuffle on user)."""
+    session (lag + running-sum pattern; one shuffle on user). Gaps are
+    compared in whole microseconds, so 1800.4 s exceeds a 1800 s gap."""
     w = W.partitionBy(user_col).orderBy(ts_col, order_col)
-    gap = F.unix_timestamp(ts_col) - F.unix_timestamp(F.lag(ts_col, 1).over(w))
-    new_session = F.when(gap.isNull() | (gap > gap_seconds), 1).otherwise(0)
+    gap = F.unix_micros(ts_col) - F.unix_micros(F.lag(ts_col, 1).over(w))
+    new_session = F.when(
+        gap.isNull() | (gap > gap_seconds * 1_000_000), 1
+    ).otherwise(0)
     cum = w.rowsBetween(W.unboundedPreceding, W.currentRow)
     return df.withColumn(
         "session_id", F.sum(new_session).over(cum).cast("long")

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from spark_ml_spark.api import connected_components
 from spark_ml_spark.functions.text import char_ngrams, word_shingles, ws_tokens
 from spark_ml_spark.io.sources import load
 from spark_ml_spark.registry import query
@@ -456,19 +457,11 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pair-wise dropping over-deletes on chains and under-deletes on
     triangles).
 
-    Distributed CC via iterative min-label propagation (the
-    Hash-to-Min / GraphFrames design): every node starts labeled with
-    its own id; each round every node takes the min of its own and its
-    neighbors' labels; converged when no label changes. Rounds =
-    component diameter — near-dup clusters are shallow (dozens of docs,
-    diameter ~2-4), so 3-5 rounds in practice; the driver loop is
-    log-bounded, NOT per-row. Each round is one join + one partial-
-    aggregated min — the same two-shuffle cost profile at any corpus
-    size, and only (node, label) longs ever shuffle. Convergence is
-    detected by the monotone sum(label) invariant (labels only
-    decrease, so an unchanged sum IS the fixpoint) — one scalar agg per
-    round, no row-wise diff. Lineage is truncated with localCheckpoint
-    every round so the plan does not grow with iterations.
+    Components come from :func:`api.connected_components`: iterative
+    min-label propagation (the Hash-to-Min / GraphFrames design), one
+    join + one partial-aggregated min per round, rounds = component
+    diameter — near-dup clusters are shallow (dozens of docs, diameter
+    ~2-4), so 3-5 rounds in practice.
 
     Output: one row per doc that has at least one near-duplicate —
     its cluster id (min doc_id in the component), the cluster size, and
@@ -496,36 +489,11 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.levenshtein("pref_a", "pref_b") <= 10)
         .select("doc_a", "doc_b")
     )
-    edges = pairs.union(
-        pairs.select(F.col("doc_b").alias("doc_a"),
-                     F.col("doc_a").alias("doc_b"))
-    ).toDF("src", "dst").localCheckpoint(eager=True)
-
-    labels = (
-        edges.select(F.col("src").alias("node")).distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    prev_sum = labels.agg(F.sum("label")).first()[0]
-    for _ in range(15):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.min("label").alias("nmin"))
-        )
-        labels = (
-            labels.join(neighbor_min, "node", "left")
-            .select("node", F.least("label", "nmin").alias("label"))
-            .localCheckpoint(eager=True)
-        )
-        cur_sum = labels.agg(F.sum("label")).first()[0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
+    labels = connected_components(pairs, "doc_a", "doc_b")
 
     w = W.partitionBy("cluster_id")
     return labels.select(
-        F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
+        F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
     ).select(
         "doc_id", "cluster_id",
         F.count(F.lit(1)).over(w).alias("cluster_size"),

@@ -1,5 +1,5 @@
-"""The ranked r13 REOPENING.md batch — top seven PROMOTED into the r12
-flip, the final two STAGED for r13.
+"""The ranked r13 REOPENING.md batch — the top seven, PROMOTED into the
+r12 flip.
 
 Drafted and implemented under the bounded-cadence policy (~10 new
 registrations/round) exactly the way ``staged_r11.py`` staged the r11
@@ -7,16 +7,13 @@ wave: fully implemented to house standard (DuckDB oracle SQL, integer
 micro-unit quantization, scale-shape docstrings) one round before
 registration. The r12 flip registered the ``PROMOTED`` seven (the
 staged r12 trio used only 3 of the ~10 budget; REOPENING.md r13
-section planned this promotion); ``STAGED`` carries the remaining two
-(``q_sql_collation``, ``q_minhash_recall_audit``) for the r13 flip —
-``tests/test_staged_r13.py`` pins that those two stay unregistered
-(``len(queries()) == 376`` until the r13 flip).
+section planned this promotion).
 
 Every candidate passed the three drafting vettings FIRST (REOPENING.md
 r13 section): capability-overlap grep over the full registry, fixture
-support, and environment support — pipe syntax, SQL scalar UDFs,
-UTF8_LCASE collation, and the Datasketches HLL functions were each
-executed against the pinned PySpark 4.1.2 before any code was written.
+support, and environment support — pipe syntax, SQL scalar UDFs and
+the Datasketches HLL functions were each executed against the pinned
+PySpark 4.1.2 before any code was written.
 (The drafting probe's merged==direct HLL estimate equality turned out
 to hold only in dense array mode — staging at fixture scale replaced
 it with the 5σ band on both paths; see ``q_hll_merge_rollup``.)
@@ -28,8 +25,7 @@ per REOPENING.md's r13 ranking. Siblings: ``q_hll_error_audit`` /
 ``q_tfidf_topterms`` (term scoring), ``q_ess_weights`` (weight
 diagnostics), ``q_hash_split`` (portable fold hash), ``q_bfs_levels``
 (unweighted graph traversal), ``q_sql_pivot`` / ``q_sql_groupby_all``
-(modern SQL surface), ``q_ngram_jaccard`` / ``q_minhash_neardup``
-(near-dup detection).
+(modern SQL surface).
 """
 
 from __future__ import annotations
@@ -827,161 +823,6 @@ ORDER BY band
 """
 
 
-# --------------------------------------------------------------------
-# REOPENING r13 #8: UTF8_LCASE collated grouping
-# --------------------------------------------------------------------
-
-def q_sql_collation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Case-insensitive collated grouping (REOPENING r13 #8, env-vetted
-    — Spark 4 collations): a deterministically case-mangled market
-    segment key (upper for even customer keys, lower for odd — the
-    mixed-case mess real ingest produces) grouped under the
-    ``UTF8_LCASE`` collation, which makes 'BUILDING' and 'building'
-    ONE group at the comparator level — no normalizing rewrite of the
-    data. The emitted key is ``lower(min(key))``: every member of a
-    collated group differs only by case, so ``lower()`` of any member
-    is the same canonical string — the output is
-    representative-independent and therefore hash-stable. The oracle
-    groups by ``lower(key)`` — a hash match proves collated grouping ≡
-    normalize-then-group.
-
-    Scale shape: a collation is a comparator change on the group key —
-    the plan is the same map-side-combined hash aggregate; no extra
-    pass, no normalized shadow column materialized over the fact.
-
-    Cites ``Data_transform.py`` passim (no collation surface in the
-    reference)."""
-    c = load(spark, sf_dir, "customer").select(
-        F.when(F.col("c_custkey") % 2 == 0, F.upper("c_mktsegment"))
-        .otherwise(F.lower("c_mktsegment")).alias("seg_raw"),
-        F.floor(F.col("c_acctbal") * 100 + F.lit(0.5))
-        .cast("bigint").alias("bal_cents"),
-    )
-    return (
-        c.groupBy(F.expr("collate(seg_raw, 'UTF8_LCASE')").alias("k"))
-        .agg(
-            F.min(F.lower("seg_raw")).alias("segment"),
-            F.count(F.lit(1)).cast("bigint").alias("n_customers"),
-            F.sum("bal_cents").alias("balance_cents"),
-        )
-        .select("segment", "n_customers", "balance_cents")
-        .orderBy("segment")
-    )
-
-
-ORACLE_SQL_COLLATION = r"""
-WITH c AS (
-  SELECT CASE WHEN c_custkey % 2 = 0 THEN upper(c_mktsegment)
-              ELSE lower(c_mktsegment) END AS seg_raw,
-         CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS bal_cents
-  FROM customer
-)
-SELECT lower(seg_raw)                    AS segment,
-       CAST(count(*) AS BIGINT)          AS n_customers,
-       CAST(sum(bal_cents) AS BIGINT)    AS balance_cents
-FROM c
-GROUP BY lower(seg_raw)
-ORDER BY segment
-"""
-
-
-# --------------------------------------------------------------------
-# REOPENING r13 #9: MinHashLSH pair-recall audit (rows-only by design)
-# --------------------------------------------------------------------
-
-#: gold-pair threshold: true word-3-shingle Jaccard >= 0.8 — the regime
-#: the fixture's engineered near-dups occupy (q_ngram_jaccard's measured
-#: 1%ile is 0.90), so both candidate stages are far from their miss
-#: cliffs and the audit is stable under fixture regeneration
-_MHR_TAU = 0.8
-#: MLlib MinHashLSH join threshold in JACCARD DISTANCE, with margin
-#: below 1-tau so HashingTF bucket collisions cannot drop a boundary
-#: gold pair from the approximate side
-_MHR_DIST = 0.25
-
-
-def q_minhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pair-recall audit of MLlib MinHashLSH candidate generation
-    (REOPENING r13 #9) — bounds the ``q_minhash_neardup`` rows-only
-    caveat the way ``q_ann_recall_audit`` bounds BRP-LSH: the gold
-    standard is the EXACT word-3-shingle Jaccard >= tau pair set
-    (deterministic xxhash64-banded candidates + exact set-algebra
-    verification — the driver-green ``q_ngram_jaccard`` machinery; at
-    the fixture's J >= 0.9 pair mass the banding miss probability is
-    ~1e-15 per pair), and the approximate side is MLlib's seeded
-    ``approxSimilarityJoin`` over HashingTF vectors of the SAME
-    shingle sets. Emits one accounting row: gold pairs, MLlib pairs,
-    hits, recall ppm, and the count MLlib found that gold did not
-    (HashingTF bucket-collision inflation — reported, not hidden).
-
-    Rows-only by design: MLlib's hash internals are engine-specific
-    (the same reason ``q_minhash_neardup`` is rows-only); the audit's
-    invariants are pinned in ``tests/test_staged_r13.py``. With this,
-    the caveat ledger reads 4 of the rows-only cohort contract-bounded.
-
-    Scale shape: both sides are banded/bucketed candidate generation —
-    the gold side shuffles (band, id) pairs only and verifies
-    candidates only (no all-pairs anywhere); the MLlib side is its own
-    banded equi-join. The final compare joins two id-pair sets.
-
-    Cites ``Data_transform.py`` passim (no dedup surface in the
-    reference)."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    from spark_ml_spark.api import minhash_candidates
-    from spark_ml_spark.functions.text import word_shingles
-
-    docs = load(spark, sf_dir, "documents").select(
-        "doc_id", word_shingles(F.col("text"), 3).alias("g")
-    ).filter(F.size("g") > 0)
-
-    # gold: banded candidates + exact verification at tau
-    cand = minhash_candidates(docs, num_hashes=128, bands=32)
-    ga = docs.select(F.col("doc_id").alias("doc_a"), F.col("g").alias("ga"))
-    gb = docs.select(F.col("doc_id").alias("doc_b"), F.col("g").alias("gb"))
-    jac = F.size(F.array_intersect("ga", "gb")).cast("double") / F.size(
-        F.array_union("ga", "gb")
-    )
-    gold = (
-        cand.join(ga, "doc_a").join(gb, "doc_b")
-        .filter(jac >= _MHR_TAU)
-        .select("doc_a", "doc_b")
-    )
-
-    # approximate side: MLlib MinHashLSH over the same shingle sets
-    tf = HashingTF(inputCol="g", outputCol="features", numFeatures=1 << 18)
-    feats = tf.transform(docs).select("doc_id", "features").cache()
-    lsh = MinHashLSH(inputCol="features", outputCol="hashes",
-                     numHashTables=16, seed=42)
-    model = lsh.fit(feats)
-    mllib = (
-        model.approxSimilarityJoin(feats, feats, _MHR_DIST,
-                                   distCol="dist")
-        .filter(F.col("datasetA.doc_id") < F.col("datasetB.doc_id"))
-        .select(
-            F.col("datasetA.doc_id").alias("doc_a"),
-            F.col("datasetB.doc_id").alias("doc_b"),
-        )
-    )
-
-    # 1-row aggregates crossJoined JVM-side (the q_ann_recall_audit
-    # shape) — no driver-side .count() actions
-    hits = gold.join(mllib, ["doc_a", "doc_b"])
-    gn = gold.agg(F.count(F.lit(1)).cast("bigint").alias("n_gold"))
-    mn = mllib.agg(F.count(F.lit(1)).cast("bigint").alias("n_mllib"))
-    hn = hits.agg(F.count(F.lit(1)).cast("bigint").alias("n_hit"))
-    return gn.crossJoin(mn).crossJoin(hn).select(
-        "n_gold",
-        "n_mllib",
-        "n_hit",
-        F.expr(
-            "CASE WHEN n_gold = 0 THEN 1000000"
-            " ELSE (1000000 * n_hit) div n_gold END"
-        ).cast("bigint").alias("recall_ppm"),
-        (F.col("n_mllib") - F.col("n_hit")).alias("n_extra_mllib"),
-    )
-
-
 #: name -> (query fn, oracle SQL): the REOPENING r13 ranking's top
 #: seven, PROMOTED into the r12 flip (the staged r12 trio used only 3
 #: of r12's ~10/round budget; precedent: r11 promoted
@@ -996,16 +837,6 @@ PROMOTED = {
     "q_shortest_path_k": (q_shortest_path_k, ORACLE_SHORTEST_PATH_K),
     "q_sql_pipe_syntax": (q_sql_pipe_syntax, ORACLE_SQL_PIPE_SYNTAX),
     "q_sql_scalar_udf": (q_sql_scalar_udf, ORACLE_SQL_SCALAR_UDF),
-}
-
-#: the remaining ranked candidates, STILL STAGED for the r13 flip —
-#: apply the same loop over this dict then (the cadence-guard test pins
-#: that these two stay unregistered until the r12 grade lands)
-STAGED = {
-    "q_sql_collation": (q_sql_collation, ORACLE_SQL_COLLATION),
-    # rows-only by design (MLlib MinHashLSH hash internals) — bounds
-    # the q_minhash_neardup caveat; registered WITHOUT oracle SQL
-    "q_minhash_recall_audit": (q_minhash_recall_audit, None),
 }
 
 # r12 promotion registration: import-time, like every other operator

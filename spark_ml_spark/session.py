@@ -18,20 +18,25 @@ import os
 from pyspark.sql import SparkSession
 
 
-def get_spark(app_name: str = "spark_ml_spark", cpus: str | int | None = None,
-              shuffle_partitions: int | None = None) -> SparkSession:
+#: directory that holds the ``spark_ml_spark`` package
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__))
+)
+
+
+def get_spark(app_name: str = "spark_ml_spark",
+              cpus: str | int | None = None) -> SparkSession:
     """Build (or reuse) a local SparkSession.
 
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` then ``os.cpu_count()``.
-    ``spark.sql.shuffle.partitions`` defaults to the core count — the
-    right size for local mode; on a cluster AQE coalescing makes the
-    initial number mostly irrelevant.
+    ``spark.sql.shuffle.partitions`` is the core count — the right size
+    for local mode; on a cluster AQE coalescing makes the initial number
+    mostly irrelevant.
     """
     if cpus is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS") or (os.cpu_count() or 4)
     cpus = str(cpus)
-    if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+    shuffle_partitions = int(cpus) if cpus.isdigit() else 32
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -51,6 +56,10 @@ def get_spark(app_name: str = "spark_ml_spark", cpus: str | int | None = None,
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
+        # Python workers start in their own processes: without this,
+        # UDFs that import the package fail with ModuleNotFoundError
+        # whenever the caller's working directory is outside the repo
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         # Long shared sessions (the 346-query bench, the 366-query driver
         # mirror, a real long-running cluster driver) accumulate
         # weakly-referenced broadcast/shuffle/RDD state that the
@@ -73,10 +82,8 @@ def get_spark(app_name: str = "spark_ml_spark", cpus: str | int | None = None,
         # r11 driver bench recorded the churned number (4.2-6.4s) for a
         # query whose steady-state is ~2.8s. 4096 entries covers the full
         # registered surface with headroom; the cost is retained class
-        # metadata (bounded, ~MBs) — workload-sized, not box-sized
-        # (override via $SPARK_GRAFT_CODEGEN_CACHE).
-        .config("spark.sql.codegen.cache.maxEntries",
-                os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
+        # metadata (bounded, ~MBs) — workload-sized, not box-sized.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

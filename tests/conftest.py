@@ -15,7 +15,7 @@ SF_MEDIUM = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="spark_ml_spark_tests", cpus=8, shuffle_partitions=8)
+    s = get_spark(app_name="spark_ml_spark_tests", cpus=8)
     yield s
     s.stop()
 

@@ -10,7 +10,7 @@ from __future__ import annotations
 import datetime
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -67,14 +67,20 @@ def test_char_ngrams_matches_python(spark, docs, n):
 @SETTINGS
 @given(
     offsets=st.lists(
-        st.tuples(st.integers(0, 3), st.integers(0, 7200)), min_size=1, max_size=20
+        st.tuples(
+            st.integers(0, 3), st.integers(0, 7200), st.integers(0, 999_999)
+        ),
+        min_size=1,
+        max_size=20,
     )
 )
+# a 1800.4 s gap is a new session, though its whole seconds tie the limit
+@example(offsets=[(0, 0, 0), (0, 1800, 400_000)])
 def test_sessionize_matches_python(spark, offsets):
     base = datetime.datetime(2024, 1, 1)
     rows = [
-        (uid, base + datetime.timedelta(seconds=sec), i)
-        for i, (uid, sec) in enumerate(offsets)
+        (uid, base + datetime.timedelta(seconds=sec, microseconds=us), i)
+        for i, (uid, sec, us) in enumerate(offsets)
     ]
     df = spark.createDataFrame(rows, "uid long, ts timestamp, eid long")
     got = {
@@ -86,7 +92,7 @@ def test_sessionize_matches_python(spark, offsets):
     per_user: dict[int, list] = {}
     for uid, ts, eid in sorted(rows, key=lambda r: (r[0], r[1], r[2])):
         prev = per_user.get(uid)
-        if prev is None or (ts - prev[0]).total_seconds() > 1800:
+        if prev is None or ts - prev[0] > datetime.timedelta(seconds=1800):
             sid = (prev[1] if prev else 0) + 1
         else:
             sid = prev[1]

@@ -1,14 +1,8 @@
 """Graded-window hygiene (VERDICT r5 directives #1/#5): the driver grades
-only the FIRST 50 entries of ``queries()``, so the registry's curated
-window must always be the oldest never-graded debt, computed
-PROGRAMMATICALLY from the CORRECTNESS artifacts — never a hand-carried
-estimate (the r5 note's ~114 vs the true 157 is how 43 queries almost
-got stranded).
-
-If this test fails at the start of a round, a new CORRECTNESS_r0N.json
-has landed: recompute the backlog and rotate ``registry._GRADED_WINDOW``
-to its first 50 names (registration order), pre-auditing them through
-``tools/driver_check.py`` before committing.
+only the FIRST 50 entries of ``queries()``, so ``registry.collect()``
+must lead with the oldest never-graded debt, computed PROGRAMMATICALLY
+from the CORRECTNESS artifacts by ``registry.proposed_window`` — never a
+hand-carried list.
 """
 
 from __future__ import annotations
@@ -36,22 +30,17 @@ def _never_graded() -> list[str]:
     registry.collect()
     # canonical_order, NOT dict order: a sibling test importing one
     # operator module before collect() reshuffles QUERIES' insertion
-    # order, but the rotation's notion of "registration order" must be
+    # order, but the window's notion of "registration order" must be
     # stable regardless of who imported what first
     return [n for n in registry.canonical_order() if n not in graded]
 
 
 def test_window_is_first_50_of_never_graded_backlog():
     backlog = _never_graded()
-    window = list(registry._GRADED_WINDOW)
+    window = list(registry.collect()[0])[:50]
     assert len(window) == 50
     if len(backlog) >= 50:
-        assert window == backlog[:50], (
-            "graded window is stale: a new CORRECTNESS artifact landed — "
-            "rotate _GRADED_WINDOW to the current backlog's first 50 "
-            "(registration order) and pre-audit via tools/driver_check.py. "
-            f"backlog head: {backlog[:5]}..."
-        )
+        assert window == backlog[:50], f"backlog head: {backlog[:5]}..."
     else:
         # backlog < 50: every backlog query must be in the window; the
         # remaining slots are continuity anchors (free once debt is paid)
@@ -60,19 +49,8 @@ def test_window_is_first_50_of_never_graded_backlog():
 
 def test_window_names_are_registered_and_first_in_collect_order():
     q, _ = registry.collect()
-    first50 = list(q)[:50]
-    assert first50 == list(registry._GRADED_WINDOW)
-
-
-def test_window_equals_proposed_window_exactly():
-    """Stricter than the backlog-prefix check: the window must equal
-    registry.proposed_window(50) in BOTH regimes — backlog ≥ 50 (window
-    = backlog head) and backlog < 50 (backlog + least-recently-graded
-    continuity anchors). This is the tripwire that makes the r9+
-    rotations one mechanical paste: when a new CORRECTNESS artifact
-    lands, this fails until the tuple is refreshed from
-    proposed_window()'s output."""
-    assert list(registry._GRADED_WINDOW) == registry.proposed_window(50)
+    assert set(q) == set(registry.QUERIES)
+    assert list(q)[:50] == registry.proposed_window(50)
 
 
 def test_proposed_window_anchor_policy(tmp_path):
@@ -136,32 +114,3 @@ def test_proposed_window_ignores_noncanonical_artifact_names(tmp_path):
     # both ignored: the window is still the canonical head
     assert registry.proposed_window(50, repo_dir=str(tmp_path)) == order[:50]
 
-
-def test_rotate_window_rewrite_roundtrip():
-    """tools/rotate_window.py's in-place rewrite must (a) be a no-op
-    when fed the current window and (b) produce source whose evaluated
-    tuple is exactly the requested names — checked against the REAL
-    registry.py text so the regex can never silently drift from the
-    file it edits."""
-    import ast
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "rotate_window", os.path.join(REPO, "tools", "rotate_window.py")
-    )
-    rw = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(rw)
-
-    src = open(os.path.join(REPO, "spark_ml_spark", "registry.py")).read()
-    registry.collect()
-    current = list(registry._GRADED_WINDOW)
-    assert rw.rewrite_tuple(src, current) == src  # no-op on current names
-
-    fake = [f"q_fake_{i}" for i in range(50)]
-    out = rw.rewrite_tuple(src, fake)
-    m = [n for n in ast.walk(ast.parse(out))
-         if isinstance(n, ast.Assign)
-         and getattr(n.targets[0], "id", "") == "_GRADED_WINDOW"]
-    assert len(m) == 1
-    assert list(ast.literal_eval(m[0].value)) == fake

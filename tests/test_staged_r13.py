@@ -5,9 +5,8 @@ applies (column names + order-insensitive value hash via
 registration per the staging discipline, kept green after the r12
 flip registered the PROMOTED seven.
 
-Also pins the cadence guard: the two still-STAGED names must stay
-unregistered (``len(queries()) == 376`` after the r12 flip, until the
-r13 flip registers them — updated alongside that flip).
+Also pins the cadence guard: ``len(queries()) == 376`` after the r12
+flip.
 """
 
 from __future__ import annotations
@@ -28,27 +27,21 @@ from spark_ml_spark.operators.staged_r13 import (  # noqa: E402
     _SP_K,
     _SP_SEED_MOD,
     PROMOTED,
-    STAGED,
 )
 from spark_ml_spark.registry import QUERIES, collect  # noqa: E402
-
-#: every r13-batch query, promoted or still staged — the oracle and
-#: invariant tests below cover both cohorts identically
-BATCH = {**PROMOTED, **STAGED}
 
 
 def test_r12_flip_promoted_seven_staged_two():
     qs, _ = collect()
     assert len(qs) == 376
     assert set(PROMOTED) <= set(QUERIES)
-    assert not set(STAGED) & set(QUERIES)
-    assert not set(BATCH) & set(STAGED_R12)
+    assert not set(PROMOTED) & set(STAGED_R12)
 
 
 @pytest.mark.parametrize(
-    "name", sorted(n for n, (_, sql) in BATCH.items() if sql is not None))
+    "name", sorted(n for n, (_, sql) in PROMOTED.items() if sql is not None))
 def test_staged_oracle_match(name, spark, duck, sf_dir):
-    fn, sql = BATCH[name]
+    fn, sql = PROMOTED[name]
     sdf = fn(spark, sf_dir)
     scols = sdf.columns
     srows = [tuple(r) for r in sdf.collect()]
@@ -68,7 +61,7 @@ def test_hll_merge_rollup_contract_holds(spark, sf_dir):
     # estimate sit inside the 5-sigma band for every week (estimate
     # EQUALITY between the two paths was rejected during staging —
     # sparse-mode promotion differs; see the query docstring)
-    rows = BATCH["q_hll_merge_rollup"][0](spark, sf_dir).collect()
+    rows = PROMOTED["q_hll_merge_rollup"][0](spark, sf_dir).collect()
     assert rows
     assert all(r.merged_in_bound for r in rows)
     assert all(r.direct_in_bound for r in rows)
@@ -77,7 +70,7 @@ def test_hll_merge_rollup_contract_holds(spark, sf_dir):
 
 
 def test_phrase_search_counts_are_positive_and_docs_exist(spark, sf_dir):
-    rows = BATCH["q_phrase_search"][0](spark, sf_dir).collect()
+    rows = PROMOTED["q_phrase_search"][0](spark, sf_dir).collect()
     assert rows, "the top trigram must occur somewhere"
     assert all(r.n_occ >= 1 for r in rows)
     ids = [r.doc_id for r in rows]
@@ -88,7 +81,7 @@ def test_ipf_raking_margins_move_toward_targets(spark, sf_dir):
     # after the final COLUMN phase, every segment margin must sit within
     # one integer-floor step per cell of its target (floor drops < 1
     # milli-unit per cell)
-    rows = BATCH["q_ipf_raking"][0](spark, sf_dir).collect()
+    rows = PROMOTED["q_ipf_raking"][0](spark, sf_dir).collect()
     assert rows
     assert all(r.w_milli >= 0 for r in rows)
     segs: dict[str, int] = {}
@@ -105,7 +98,7 @@ def test_ipf_raking_margins_move_toward_targets(spark, sf_dir):
 
 
 def test_target_encode_oof_excludes_own_fold(spark, duck, sf_dir):
-    rows = BATCH["q_target_encode_oof"][0](spark, sf_dir).collect()
+    rows = PROMOTED["q_target_encode_oof"][0](spark, sf_dir).collect()
     assert rows
     # complete (category x fold) grid with disjoint complements
     by_cat: dict[str, list] = {}
@@ -124,7 +117,7 @@ def test_target_encode_oof_excludes_own_fold(spark, duck, sf_dir):
 
 
 def test_shortest_path_costs_are_consistent(spark, sf_dir):
-    rows = BATCH["q_shortest_path_k"][0](spark, sf_dir).collect()
+    rows = PROMOTED["q_shortest_path_k"][0](spark, sf_dir).collect()
     assert rows
     by_node = {r.node: r for r in rows}
     assert len(by_node) == len(rows)
@@ -141,7 +134,7 @@ def test_shortest_path_costs_are_consistent(spark, sf_dir):
 def test_sql_pipe_plan_matches_ansi_plan_shape(spark, sf_dir):
     # pipe syntax is front-end sugar: the optimized plan must contain
     # the same join + aggregate nodes (no extra passes)
-    df = BATCH["q_sql_pipe_syntax"][0](spark, sf_dir)
+    df = PROMOTED["q_sql_pipe_syntax"][0](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Join" in plan
     assert "HashAggregate" in plan or "SortAggregate" in plan
@@ -151,38 +144,13 @@ def test_sql_pipe_plan_matches_ansi_plan_shape(spark, sf_dir):
 def test_sql_scalar_udf_is_inlined(spark, sf_dir):
     # the SQL UDF must resolve to its body — no Python eval node and a
     # plain aggregate over the inlined CASE
-    df = BATCH["q_sql_scalar_udf"][0](spark, sf_dir)
+    df = PROMOTED["q_sql_scalar_udf"][0](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan
     assert "PythonUDF" not in plan
     # idempotent across repeated calls in one session (CREATE OR REPLACE)
-    again = BATCH["q_sql_scalar_udf"][0](spark, sf_dir).collect()
+    again = PROMOTED["q_sql_scalar_udf"][0](spark, sf_dir).collect()
     assert [tuple(r) for r in again] == [tuple(r) for r in df.collect()]
-
-
-def test_sql_collation_groups_case_insensitively(spark, sf_dir):
-    rows = BATCH["q_sql_collation"][0](spark, sf_dir).collect()
-    assert rows
-    # canonical keys are lowercase and unique (one group per segment,
-    # not one per casing)
-    segs = [r.segment for r in rows]
-    assert segs == sorted(segs)
-    assert all(s == s.lower() for s in segs)
-    assert len(set(segs)) == len(segs)
-
-
-def test_minhash_recall_audit_invariants(spark, sf_dir):
-    # rows-only by design — these invariants ARE its correctness story
-    rows = BATCH["q_minhash_recall_audit"][0](spark, sf_dir).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert r.n_gold >= 1, "the fixture's engineered near-dups must exist"
-    assert 0 <= r.n_hit <= min(r.n_gold, r.n_mllib)
-    assert r.n_extra_mllib == r.n_mllib - r.n_hit
-    assert r.recall_ppm == (1_000_000 * r.n_hit) // r.n_gold
-    # 16 single-row hash tables at J>=0.8: per-pair miss <= 0.2^16 —
-    # recall should be total; leave headroom for one boundary pair
-    assert r.recall_ppm >= 950_000
 
 
 # ----------------------------------------------------------------------
@@ -215,7 +183,7 @@ def test_ipf_raking_matches_pure_python(spark, duck, sf_dir):
             for k in list(w):
                 if k[1] == c:
                     w[k] = (w[k] * t_col) // s
-    rows = BATCH["q_ipf_raking"][0](spark, sf_dir).collect()
+    rows = PROMOTED["q_ipf_raking"][0](spark, sf_dir).collect()
     got = {(r.nationkey, r.c_mktsegment): r.w_milli for r in rows}
     assert got == w
 
@@ -248,7 +216,7 @@ def test_shortest_path_matches_pure_python(spark, duck, sf_dir):
                 if m not in nxt or cand < nxt[m]:
                     nxt[m] = cand
         best = nxt
-    rows = BATCH["q_shortest_path_k"][0](spark, sf_dir).collect()
+    rows = PROMOTED["q_shortest_path_k"][0](spark, sf_dir).collect()
     got = {r.node: (r.path_cost, r.hops) for r in rows}
     assert got == best
 
@@ -270,5 +238,5 @@ def test_phrase_search_matches_pure_python(spark, duck, sf_dir):
         )
         if n:
             expect[d] = n
-    rows = BATCH["q_phrase_search"][0](spark, sf_dir).collect()
+    rows = PROMOTED["q_phrase_search"][0](spark, sf_dir).collect()
     assert {r.doc_id: r.n_occ for r in rows} == expect
