@@ -3,9 +3,13 @@ over ARBITRARY DataFrames (the registered ``q_*`` queries are thin
 bindings of these onto the driver's test tables).
 
 All functions return lazy DataFrames/Columns — they compose into one
-Catalyst plan with the caller's own transformations. None of them collect,
-cache (except where a self-join needs it), or assume a data scale; scale
-notes per function.
+Catalyst plan with the caller's own transformations, and none assumes a
+data scale (scale notes per function). Two kinds run or pin work while
+the plan is built: ``connected_components`` runs eager
+``localCheckpoint`` jobs and a ``.first()`` convergence check every
+round, and the two-phase helpers (``global_rank``, ``grouped_rank``,
+``global_prefix_sum``) ``persist()`` their range-partitioned input,
+which stays in Spark's cache manager until the caller clears it.
 """
 
 from __future__ import annotations
@@ -416,7 +420,7 @@ def connected_components(
     # re-exchanging them each round (guide §2.4; the q_bfs_levels /
     # q_shortest_path_k pattern). Labels are independent of
     # partitioning, so results are unchanged.
-    npart = _resolve_partitions(edges, None)
+    npart = _resolve_partitions(edges)
     und = und.distinct().repartition(npart, "_d").localCheckpoint(eager=True)
 
     labels = (
@@ -448,266 +452,153 @@ def connected_components(
 # --------------------------------------------------------------------------
 
 
-def _resolve_partitions(df: DataFrame, partitions: int | None) -> int:
-    """Range-partition count for the two-phase rank/prefix helpers:
-    the session's shuffle-partition conf unless the caller pins one
-    (r12: the former hard-coded 32 was a local-mode constant; ranks
-    over a total order are partition-count invariant, so following the
-    session conf changes nothing locally and scales on a cluster)."""
-    if partitions is not None:
-        return partitions
+def _resolve_partitions(df: DataFrame) -> int:
+    """Range/hash partition count for repartitioning helpers: the
+    session's shuffle-partition conf (results never depend on it), or
+    the default parallelism when that conf is not a number."""
     try:
         return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
         return df.sparkSession.sparkContext.defaultParallelism
 
 
-def global_rank(
-    df: DataFrame, sort_cols: list[str], partitions: int | None = None,
-    rank_col: str = "global_rank", total_col: str = "n_total",
+def _col(qualifier: str, name: str) -> Column:
+    """Column ``name`` of the frame aliased ``qualifier``."""
+    return F.col(f"{qualifier}.`{name}`")
+
+
+def _two_phase(
+    df: DataFrame, group_cols: list[str], sort_cols: list[str],
+    weight: str | None, out_col: str, total_col: str,
 ) -> DataFrame:
-    """Dense global 1-based rank over ``sort_cols`` WITHOUT a
-    single-partition window (the 'WindowExec: No Partition Defined'
+    """Inclusive running count (``weight=None``) or running BIGINT sum of
+    ``weight`` over ``sort_cols`` within each ``group_cols`` group (the
+    whole frame when there are none), WITHOUT a single-partition or
+    one-reducer-per-group window (the 'WindowExec: No Partition Defined'
     scale-killer — VERDICT r1 wrong-#4).
 
-    Phase 1: range-repartition on the sort key; ``row_number`` within each
-    range partition (every partition sorts only its own slice).
-    Phase 2: per-partition counts fold into ONE array-of-structs row
-    (|partitions| entries), and the exclusive prefix offsets are
-    materialized as a <=``partitions``-row OFFSETS TABLE (the
-    higher-order aggregate lambdas run once per partition id, at build
-    time) that broadcast-HASH-joins back onto the fact on ``_pid`` —
-    the rank column is then plain arithmetic, so callers' pushed-down
-    rank predicates cannot make Catalyst re-expand a per-row array
-    fold (the r11 ``global_prefix_sum`` finding, applied to the twin).
-    No unpartitioned window anywhere and no driver collect.
+    Phase 1: range-repartition on ``group_cols + sort_cols``, so a group
+    spans a run of partitions and each partition sorts only its own
+    slice; a window over ``(_pid, group)`` gives the local value.
+    Phase 2: per-(group, partition) totals fold into one sorted
+    array-of-structs row per group, and the exclusive prefix offsets
+    become an OFFSETS TABLE keyed by (group, ``_pid``) that broadcast-
+    HASH-joins back onto the fact. The fold's lambdas therefore run once
+    per offsets row at build time, and ``out_col`` is plain arithmetic:
+    callers' pushed-down predicates on it cannot make Catalyst re-expand
+    a per-row array fold (r11: the first ``q_weighted_quantile``
+    formulation inlined the fold into a BroadcastNestedLoopJoin
+    condition, ~11x per fact row). Without groups the fold is one row,
+    cross-joined as a broadcast ungrouped aggregate (the Aggregate
+    (keys=[]) shape the BNLJ plan gate requires). Group keys join
+    null-safely, so a NULL group is ranked like any other.
 
-    ``sort_cols`` must be a total order (include a unique tiebreaker) or
-    ranks are nondeterministic across range-partitioner samplings. Adds
-    ``rank_col`` and ``total_col`` (corpus row count, for ntile-style
-    arithmetic); drops nothing else. The value-summing twin is
-    :func:`global_prefix_sum` (same two-phase machinery; candidates for
-    a shared internal once registration reopens — see REOPENING.md).
-    """
-    # the working columns and outputs must not collide with input columns
-    # — a pre-existing _pid/_rn/_pcs (or rank/total name) would silently
-    # corrupt ranks through ambiguous references (ADVICE r2)
-    reserved = {"_pid", "_rn", "_pcs", "_off", "_tot", rank_col, total_col}
+    ``sort_cols`` must totally order each group (include a unique
+    tiebreaker), or values at equal keys are nondeterministic across
+    range-partitioner samplings. Output columns: the group columns, the
+    other input columns, ``out_col`` and ``total_col`` (the group's row
+    count or weight total). Scale bound: the offsets table has one row
+    per (group, partition touching it) — meant for few large (skewed)
+    groups; for many small groups a plain grouped window is already
+    skew-free."""
+    # working and output names must not collide with input columns: a
+    # pre-existing _pid etc. would silently corrupt values through
+    # ambiguous references (ADVICE r2)
+    reserved = {
+        "_pid", "_loc", "_ptot", "_parts", "_off", "_tot", out_col, total_col,
+    }
     clash = reserved & set(df.columns)
     if clash:
         raise ValueError(
-            f"global_rank: input columns collide with working/output "
-            f"names {sorted(clash)}; rename them or pass different "
-            f"rank_col/total_col")
-    if rank_col == total_col:
-        raise ValueError("global_rank: rank_col and total_col must differ")
-    partitions = _resolve_partitions(df, partitions)
-    # persist the ranged layout: the rank join's two branches (local
-    # ranks, per-partition counts) BOTH read this exchange, and their
-    # consistency otherwise depends on Spark deduplicating the two
-    # RangePartitioner samplings into one ReusedExchange — when a plan
-    # change (e.g. a cached upstream) defeats that reuse, the branches
-    # sample different boundaries and ranks silently corrupt (caught by
+            f"input columns collide with working/output names "
+            f"{sorted(clash)}; rename them or pass different output names")
+    if out_col == total_col:
+        raise ValueError(
+            f"the output and total columns must differ (both {out_col!r})")
+    # persist the ranged layout: the local-value and per-partition-total
+    # branches BOTH read this exchange, and their consistency otherwise
+    # depends on Spark deduplicating the two RangePartitioner samplings
+    # into one ReusedExchange — when a plan change (e.g. a cached
+    # upstream) defeats that reuse, the branches sample different
+    # boundaries and values silently corrupt (caught by
     # q_skipping_report's 65-file artifact, r3). Pinning the
     # materialization makes _pid a fact of the data, not of the planner.
-    ranged = df.repartitionByRange(partitions, *sort_cols).withColumn(
-        "_pid", F.spark_partition_id()
-    ).persist()
-    w_local = W.partitionBy("_pid").orderBy(*sort_cols)
-    local = ranged.withColumn("_rn", F.row_number().over(w_local))
-    pcnt = local.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt"))
-    pcs = pcnt.agg(
-        F.sort_array(
-            F.collect_list(F.struct(F.col("_pid").alias("pid"), F.col("cnt")))
-        ).alias("_pcs")
+    ranged = df.repartitionByRange(
+        _resolve_partitions(df), *group_cols, *sort_cols
+    ).withColumn("_pid", F.spark_partition_id()).persist()
+    w_local = W.partitionBy("_pid", *group_cols).orderBy(*sort_cols)
+    if weight is None:
+        local_val, part_val = F.row_number().over(w_local), F.count(F.lit(1))
+    else:
+        v = F.col(weight).cast("bigint")
+        local_val, part_val = F.sum(v).over(w_local), F.sum(v)
+    local = ranged.withColumn("_loc", local_val)
+    parts = local.groupBy("_pid", *group_cols).agg(part_val.alias("_ptot"))
+    folded = parts.groupBy(*group_cols).agg(
+        F.sort_array(F.collect_list(
+            F.struct(F.col("_pid").alias("pid"), F.col("_ptot").alias("n"))
+        )).alias("_parts")
     )
-    # materialize the exclusive-prefix offset PER PARTITION ID (the
-    # lambdas fold the <=`partitions`-element array once per pid row,
-    # not once per fact-row reference); the 1-row pcs build side keeps
-    # the Aggregate(keys=[]) shape the BNLJ plan gate requires
-    offs = pcnt.crossJoin(F.broadcast(pcs)).select(
+
+    def same_group(a: str, b: str) -> list[Column]:
+        return [_col(a, g).eqNullSafe(_col(b, g)) for g in group_cols]
+
+    if group_cols:
+        joined = parts.alias("p").join(
+            F.broadcast(folded.alias("f")), same_group("p", "f"))
+    else:
+        joined = parts.alias("p").crossJoin(F.broadcast(folded))
+    offs = joined.select(
+        *(_col("p", g) for g in group_cols),
         "_pid",
         F.aggregate(
-            F.filter("_pcs", lambda p: p["pid"] < F.col("_pid")),
+            F.filter("_parts", lambda p: p["pid"] < F.col("_pid")),
             F.lit(0).cast("bigint"),
-            lambda acc, p: acc + p["cnt"],
+            lambda acc, p: acc + p["n"],
         ).alias("_off"),
         F.aggregate(
-            "_pcs", F.lit(0).cast("bigint"), lambda acc, p: acc + p["cnt"]
+            "_parts", F.lit(0).cast("bigint"), lambda acc, p: acc + p["n"]
         ).alias("_tot"),
     )
-    return (
-        local.join(F.broadcast(offs), "_pid")
-        .withColumn(rank_col, F.col("_rn").cast("bigint") + F.col("_off"))
-        .withColumn(total_col, F.col("_tot"))
-        .drop("_pid", "_rn", "_off", "_tot")
+    rest = [c for c in df.columns if c not in group_cols]
+    return local.alias("l").join(
+        F.broadcast(offs.alias("o")),
+        [*same_group("l", "o"), _col("l", "_pid") == _col("o", "_pid")],
+    ).select(
+        *(_col("l", c) for c in [*group_cols, *rest]),
+        (_col("l", "_loc").cast("bigint") + F.col("_off")).alias(out_col),
+        F.col("_tot").alias(total_col),
     )
+
+
+def global_rank(
+    df: DataFrame, sort_cols: list[str],
+    rank_col: str = "global_rank", total_col: str = "n_total",
+) -> DataFrame:
+    """Dense global 1-based rank over ``sort_cols`` (a total order),
+    plus ``total_col`` = the row count, for ntile-style arithmetic.
+    Two-phase: see :func:`_two_phase`."""
+    return _two_phase(df, [], sort_cols, None, rank_col, total_col)
 
 
 def global_prefix_sum(
     df: DataFrame, sort_cols: list[str], val_col: str,
-    partitions: int | None = None,
     cum_col: str = "cum_sum", total_col: str = "sum_total",
 ) -> DataFrame:
-    """Inclusive running sum of ``val_col`` over the global order
-    ``sort_cols`` WITHOUT a single-partition window — the value-summing
-    twin of :func:`global_rank` (same two-phase shape, same hazards;
-    self-review r9 extracted it here so the subtle machinery lives
-    once: weighted quantiles, CDFs, and cumulative-share queries all
-    need a prefix SUM where global_rank gives a prefix COUNT).
-
-    Phase 1: range-repartition on the sort key; a windowed running sum
-    within each range partition (every partition scans only its slice).
-    Phase 2: per-partition value totals fold into ONE array-of-structs
-    row, and the exclusive prefix offsets are materialized as a
-    <=``partitions``-row OFFSETS TABLE (the higher-order aggregate
-    lambdas run once per partition id, at build time) that
-    broadcast-HASH-joins back onto the fact on ``_pid``. The cumulative
-    column is then plain column arithmetic (``_cw + _off``) — callers
-    can reference it many times in pushed-down predicates without
-    Catalyst re-expanding a per-row array aggregate each time (the r11
-    q_weighted_quantile finding: the first formulation inlined the
-    lambda into a BroadcastNestedLoopJoin condition, evaluating the
-    array fold ~11x per fact row). Accumulation is BIGINT — callers
-    whose values can overflow int64 at target scale should pre-scale
-    (the same contract as the repo's micro-unit convention).
-
-    ``sort_cols`` must be a total order (include a unique tiebreaker)
-    or cumulative sums at equal keys are nondeterministic across
-    range-partitioner samplings. Adds ``cum_col`` and ``total_col``
-    (the grand total, for share-of-total arithmetic); drops nothing
-    else.
-    """
-    reserved = {"_pid", "_cw", "_pts", "_off", "_tot", cum_col, total_col}
-    clash = reserved & set(df.columns)
-    if clash:
-        raise ValueError(
-            f"global_prefix_sum: input columns collide with working/"
-            f"output names {sorted(clash)}; rename them or pass "
-            f"different cum_col/total_col")
-    if cum_col == total_col:
-        raise ValueError(
-            "global_prefix_sum: cum_col and total_col must differ")
-    partitions = _resolve_partitions(df, partitions)
-    # persist the ranged layout for the same reason global_rank does:
-    # the running-sum and per-partition-totals branches both read this
-    # exchange, and without pinning, a defeated ReusedExchange lets the
-    # two branches sample different range boundaries (the silent-rank-
-    # corruption class caught by q_skipping_report's artifact, r3)
-    ranged = df.repartitionByRange(partitions, *sort_cols).withColumn(
-        "_pid", F.spark_partition_id()
-    ).persist()
-    local = ranged.withColumn(
-        "_cw",
-        F.sum(F.col(val_col).cast("bigint")).over(
-            W.partitionBy("_pid").orderBy(*sort_cols)
-        ),
-    )
-    ptot = ranged.groupBy("_pid").agg(
-        F.sum(F.col(val_col).cast("bigint")).alias("pw")
-    )
-    pts = ptot.agg(
-        F.sort_array(
-            F.collect_list(F.struct(F.col("_pid").alias("pid"), F.col("pw")))
-        ).alias("_pts")
-    )
-    # materialize the exclusive-prefix offset PER PARTITION ID (the
-    # lambdas fold the <=`partitions`-element array once per pid row,
-    # not once per fact-row reference); the 1-row pts build side keeps
-    # the Aggregate(keys=[]) shape the BNLJ plan gate requires
-    offs = ptot.crossJoin(F.broadcast(pts)).select(
-        "_pid",
-        F.aggregate(
-            F.filter("_pts", lambda p: p["pid"] < F.col("_pid")),
-            F.lit(0).cast("bigint"),
-            lambda acc, p: acc + p["pw"],
-        ).alias("_off"),
-        F.aggregate(
-            "_pts", F.lit(0).cast("bigint"), lambda acc, p: acc + p["pw"]
-        ).alias("_tot"),
-    )
-    return (
-        local.join(F.broadcast(offs), "_pid")
-        .withColumn(cum_col, F.col("_cw") + F.col("_off"))
-        .withColumn(total_col, F.col("_tot"))
-        .drop("_pid", "_cw", "_off", "_tot")
-    )
+    """Inclusive running BIGINT sum of ``val_col`` over the global order
+    ``sort_cols`` (a total order), plus ``total_col`` = the grand total
+    — the prefix SUM that weighted quantiles, CDFs and cumulative shares
+    need where :func:`global_rank` gives a prefix COUNT. Callers whose
+    values can overflow int64 at target scale should pre-scale."""
+    return _two_phase(df, [], sort_cols, val_col, cum_col, total_col)
 
 
 def grouped_rank(
     df: DataFrame, group_cols: list[str], sort_cols: list[str],
-    partitions: int | None = None,
     rank_col: str = "group_rank", total_col: str = "n_in_group",
 ) -> DataFrame:
-    """Per-GROUP 1-based rank over ``sort_cols`` without a one-reducer-
-    per-group window — the grouped twin of :func:`global_rank`.
-
-    A plain ``Window.partitionBy(group).orderBy(key)`` puts every row of
-    a group on ONE task; with few, large groups (languages in a web
-    corpus, length bands in a batching pass) the biggest group becomes a
-    straggler holding 40%+ of the data. Here:
-
-    Phase 1: range-repartition on ``(group_cols + sort_cols)`` so each
-    group spans a *run* of partitions, each partition sorting only its
-    own slice (``row_number`` over ``(_pid, group)``).
-    Phase 2: per-(group, partition) counts fold into one array-of-structs
-    row PER GROUP (|groups| rows), and the exclusive prefix offsets are
-    materialized as a (group, partition)-keyed OFFSETS TABLE (the fold
-    runs once per offsets row, not once per fact-row reference — the
-    r11 global_prefix_sum/global_rank finding) that broadcast-joins
-    back on (group, _pid); rank = local rank + the offset column.
-
-    Scale bound: the broadcast side is |groups| × |partitions-touching-
-    that-group| structs — meant for few-large-groups skew (its whole
-    point); for high-cardinality small groups use a plain grouped window,
-    which is already skew-free there. ``sort_cols`` must total-order rows
-    within a group (include a tiebreaker). Adds ``rank_col`` and
-    ``total_col`` (group row count, for percentile arithmetic)."""
-    reserved = {"_pid", "_rn", "_gpcs", "_off", "_tot", rank_col, total_col}
-    clash = reserved & set(df.columns)
-    if clash:
-        raise ValueError(
-            f"grouped_rank: input columns collide with working/output "
-            f"names {sorted(clash)}; rename them or pass different "
-            f"rank_col/total_col")
-    if rank_col == total_col:
-        raise ValueError("grouped_rank: rank_col and total_col must differ")
-    partitions = _resolve_partitions(df, partitions)
-    # persist for branch-consistent _pid — same rationale (and same r3
-    # incident) as global_rank above
-    ranged = df.repartitionByRange(
-        partitions, *group_cols, *sort_cols
-    ).withColumn("_pid", F.spark_partition_id()).persist()
-    w_local = W.partitionBy("_pid", *group_cols).orderBy(*sort_cols)
-    local = ranged.withColumn("_rn", F.row_number().over(w_local))
-    gcnt = local.groupBy("_pid", *group_cols).agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    gpcs = gcnt.groupBy(*group_cols).agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(F.col("_pid").alias("pid"), F.col("cnt"))
-            )
-        ).alias("_gpcs")
-    )
-    # materialize the exclusive-prefix offset PER (group, partition id)
-    # — the lambdas fold each group's array once per offsets row, never
-    # once per fact-row reference
-    offs = gcnt.join(F.broadcast(gpcs), group_cols).select(
-        *group_cols,
-        "_pid",
-        F.aggregate(
-            F.filter("_gpcs", lambda p: p["pid"] < F.col("_pid")),
-            F.lit(0).cast("bigint"),
-            lambda acc, p: acc + p["cnt"],
-        ).alias("_off"),
-        F.aggregate(
-            "_gpcs", F.lit(0).cast("bigint"), lambda acc, p: acc + p["cnt"]
-        ).alias("_tot"),
-    )
-    return (
-        local.join(F.broadcast(offs), [*group_cols, "_pid"])
-        .withColumn(rank_col, F.col("_rn").cast("bigint") + F.col("_off"))
-        .withColumn(total_col, F.col("_tot"))
-        .drop("_pid", "_rn", "_off", "_tot")
-    )
+    """Per-group 1-based rank over ``sort_cols`` (a total order within
+    each group; NULL is a group like any other), plus ``total_col`` =
+    the group's row count. Unlike ``Window.partitionBy(group)``, a large
+    group is spread over several tasks instead of one straggler."""
+    return _two_phase(df, group_cols, sort_cols, None, rank_col, total_col)

@@ -241,7 +241,7 @@ def q_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12). Partition count follows the session conf via
     # api._resolve_partitions (ADVICE r12: guard non-numeric conf),
     # not a local constant.
-    npart = _resolve_partitions(load(spark, sf_dir, "lineitem"), None)
+    npart = _resolve_partitions(load(spark, sf_dir, "lineitem"))
     edges = _part_edges_sym(spark, sf_dir, npart).persist()
     # eagerly materialize the edge cache BEFORE the levels are planned
     # (r13): an unmaterialized cache is an AdaptiveSparkPlan whose

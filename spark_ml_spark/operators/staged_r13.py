@@ -576,7 +576,7 @@ def q_shortest_path_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         "            struct(element_at(ps, i + 1) AS src,"
         "                   element_at(ps, i) AS dst))))"
     )
-    npart = _resolve_partitions(baskets, None)
+    npart = _resolve_partitions(baskets)
     edges = (
         baskets.select(F.explode(chain_sym).alias("p"))
         .select("p.src", "p.dst")

@@ -42,3 +42,26 @@ def duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
     """DuckDB connection with all tables registered as views at sf0.001 —
     mirrors the driver's oracle setup."""
     return make_duck(sf_dir)
+
+
+@pytest.fixture(
+    params=[(n, aqe) for n in (1, 3, 32) for aqe in ("true", "false")],
+    ids=lambda p: f"sp{p[0]}-aqe_{p[1]}",
+)
+def rank_confs(spark, request):
+    """Runs a test once per shuffle-partition count × AQE setting — confs
+    that must not change a two-phase rank — on the shared session, and
+    restores the session's own values afterwards."""
+    n, aqe = request.param
+    confs = {
+        "spark.sql.shuffle.partitions": str(n),
+        "spark.sql.adaptive.enabled": aqe,
+    }
+    saved = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)

@@ -164,19 +164,23 @@ def test_domain_mix_shares_sum_to_one(spark, sf_dir):
     assert abs(sum(r.token_share for r in rows) - 1.0) < 1e-3
 
 
+# each example runs once per rank_confs cell, so fewer examples per cell
+RANK_SETTINGS = settings(SETTINGS, max_examples=5)
+
+
 @given(st.lists(st.integers(min_value=-1000, max_value=1000),
                 min_size=1, max_size=60))
-@SETTINGS
-def test_global_rank_matches_sorted_enumerate(spark, vals):
+@RANK_SETTINGS
+def test_global_rank_matches_sorted_enumerate(spark, rank_confs, vals):
     """api.global_rank (two-phase, no single-partition window) must equal
     plain sorted-order enumeration for any multiset of keys, with the id
-    tiebreaker making the order total."""
+    tiebreaker making the order total, under every rank_confs cell."""
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vals)], "id long, v long"
     )
     got = {
         r.id: (r.global_rank, r.n_total)
-        for r in api.global_rank(df, ["v", "id"], partitions=4).collect()
+        for r in api.global_rank(df, ["v", "id"]).collect()
     }
     expect = {
         rid: rank
@@ -192,21 +196,18 @@ def test_global_rank_matches_sorted_enumerate(spark, vals):
     st.integers(min_value=-1000, max_value=1000),
     st.integers(min_value=0, max_value=100)),
     min_size=1, max_size=60))
-@SETTINGS
-def test_global_prefix_sum_matches_sorted_cumsum(spark, pairs):
-    """api.global_prefix_sum (the value-summing twin of global_rank,
-    self-review r9) must equal a plain sorted-order running sum for any
-    multiset of (key, weight), with the id tiebreaker making the order
-    total."""
+@RANK_SETTINGS
+def test_global_prefix_sum_matches_sorted_cumsum(spark, rank_confs, pairs):
+    """api.global_prefix_sum must equal a plain sorted-order running sum
+    for any multiset of (key, weight), with the id tiebreaker making the
+    order total, under every rank_confs cell."""
     df = spark.createDataFrame(
         [(i, v, w) for i, (v, w) in enumerate(pairs)],
         "id long, v long, w long",
     )
     got = {
         r.id: (r.cum_sum, r.sum_total)
-        for r in api.global_prefix_sum(
-            df, ["v", "id"], "w", partitions=4
-        ).collect()
+        for r in api.global_prefix_sum(df, ["v", "id"], "w").collect()
     }
     acc, expect = 0, {}
     for v, rid, w in sorted((v, i, w) for i, (v, w) in enumerate(pairs)):
@@ -217,10 +218,29 @@ def test_global_prefix_sum_matches_sorted_cumsum(spark, pairs):
     assert all(t == total for _, t in got.values())
 
 
-def test_global_prefix_sum_rejects_colliding_columns(spark):
-    df = spark.createDataFrame([(1, 2)], "v long, cum_sum long")
+TWO_PHASE = {
+    "global_rank": lambda df, **kw: api.global_rank(df, ["v"], **kw),
+    "global_prefix_sum":
+        lambda df, **kw: api.global_prefix_sum(df, ["v"], "v", **kw),
+    "grouped_rank": lambda df, **kw: api.grouped_rank(df, ["g"], ["v"], **kw),
+}
+
+
+@pytest.mark.parametrize("fn", list(TWO_PHASE))
+def test_two_phase_rejects_colliding_columns(spark, fn):
+    """Input columns named like a working or output column, and an output
+    column named like the total column, are rejected before any plan is
+    built: either would silently corrupt results through ambiguous
+    references."""
+    call = TWO_PHASE[fn]
+    out = "cum_col" if fn == "global_prefix_sum" else "rank_col"
+    df = spark.createDataFrame([("a", 1)], "g string, v long")
     with pytest.raises(ValueError, match="collide"):
-        api.global_prefix_sum(df, ["v"], "v")
+        call(df.withColumn("_pid", F.lit(0)))
+    with pytest.raises(ValueError, match="collide"):
+        call(df, **{out: "g"})
+    with pytest.raises(ValueError, match="must differ"):
+        call(df, **{out: "x", "total_col": "x"})
 
 
 def test_funnel_counts_monotone(spark, sf_dir):

@@ -9,7 +9,6 @@ sf0.01/sf0.1 value equality.
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -23,18 +22,18 @@ SF = "/root/testdata/sf0.001"
 # grouped_rank primitive
 # --------------------------------------------------------------------------
 
-def test_grouped_rank_matches_plain_window(spark):
+def test_grouped_rank_matches_plain_window(spark, rank_confs):
     """Two-phase grouped rank == single-window row_number on a skewed
-    frame (one giant group, one tiny, one singleton)."""
+    frame (one giant group, one tiny, one singleton, and a NULL group),
+    under every rank_confs cell."""
     rows = [("a", i, i % 7) for i in range(200)] + [
         ("b", i, 3 - i) for i in range(4)
-    ] + [("c", 0, 99)]
+    ] + [("c", 0, 99), (None, 0, 5), (None, 1, 5)]
     df = spark.createDataFrame(rows, "g string, id long, key long")
     got = {
         (r.g, r.id): (r.rk, r.n)
         for r in api.grouped_rank(
-            df, ["g"], ["key", "id"], partitions=5,
-            rank_col="rk", total_col="n",
+            df, ["g"], ["key", "id"], rank_col="rk", total_col="n",
         ).collect()
     }
     w = W.partitionBy("g").orderBy("key", "id")
@@ -45,12 +44,6 @@ def test_grouped_rank_matches_plain_window(spark):
         .collect()
     }
     assert got == want
-
-
-def test_grouped_rank_rejects_colliding_columns(spark):
-    df = spark.createDataFrame([("a", 1)], "g string, _pid long")
-    with pytest.raises(ValueError, match="collide"):
-        api.grouped_rank(df, ["g"], ["_pid"])
 
 
 # --------------------------------------------------------------------------
