@@ -5,14 +5,18 @@ bindings of these onto the driver's test tables).
 All functions return lazy DataFrames/Columns — they compose into one
 Catalyst plan with the caller's own transformations, and none assumes a
 data scale (scale notes per function). Two kinds run or pin work while
-the plan is built: ``connected_components`` runs eager
-``localCheckpoint`` jobs and a ``.first()`` convergence check every
-round, and the two-phase helpers (``global_rank``, ``grouped_rank``,
-``global_prefix_sum``) ``persist()`` their range-partitioned input,
-which stays in Spark's cache manager until the caller clears it.
+the plan is built: ``iterate`` — the one Pregel-style loop behind
+``connected_components`` and the BFS / shortest-path queries — runs an
+eager ``localCheckpoint`` job every round (plus the ``until`` check)
+and leaves nothing in Spark's cache manager; the two-phase helpers
+(``global_rank``, ``grouped_rank``, ``global_prefix_sum``)
+``persist()`` their range-partitioned input, which stays in Spark's
+cache manager until the caller clears it.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
@@ -393,57 +397,104 @@ def l1_normalize(df: DataFrame, group_cols: list[str], value_col: str) -> DataFr
     )
 
 
+def iterate(
+    edges: DataFrame,
+    state: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    *,
+    rounds: int | None = None,
+    until: Callable[[DataFrame], object] | None = None,
+) -> DataFrame:
+    """Run a Pregel-style loop: ``state = step(state, k)`` for rounds
+    ``k = 1, 2, ...``, where ``step`` joins ``state`` against ``edges``
+    (the caller's closure reads the same ``edges`` frame). Stops after
+    ``rounds`` rounds, or at the first round after which ``until(state)``
+    equals its value before that round; exactly one of the two must be
+    given. Returns the last state.
+
+    Lifetime: ``edges`` is persisted and pinned with one ``count()``
+    before any round is planned, and unpersisted when the loop ends, so
+    nothing stays in Spark's cache manager. ``edges`` must be a frame
+    built for this loop, not one the caller has cached itself. The
+    initial state and every round's result are eagerly
+    ``localCheckpoint``-ed, so the rounds run as jobs while the caller
+    builds its DataFrame (plus one ``until`` evaluation per round when
+    given); each round plans against a flat leaf, and the returned frame
+    reads only the last checkpoint, whose blocks the ContextCleaner
+    frees once the frame is unreachable.
+
+    Why pinned, not checkpointed, edges: under AQE a ``localCheckpoint``
+    forgets the frame's hash partitioning, so a ``state ⋈ edges`` join
+    too big to broadcast re-exchanges the whole edge list every round. A
+    materialized cache keeps it (``InMemoryTableScan`` with the known
+    partitioning), so an edge list hash-partitioned on the join key is
+    read in place (``tests/test_api.py::test_iterate_reads_pinned_edges_in_place``).
+    The count must run before planning: an unmaterialized cache is an
+    adaptive plan whose output partitioning is unknown at planning time."""
+    if (rounds is None) == (until is None):
+        raise ValueError("iterate: give exactly one of rounds= and until=")
+    edges.persist()
+    try:
+        edges.count()
+        state = state.localCheckpoint(eager=True)
+        prev = None if until is None else until(state)
+        k = 0
+        while rounds is None or k < rounds:
+            k += 1
+            state = step(state, k).localCheckpoint(eager=True)
+            if until is not None:
+                cur = until(state)
+                if cur == prev:
+                    break
+                prev = cur
+        return state
+    finally:
+        edges.unpersist()
+
+
 def connected_components(
     edges: DataFrame, src: str = "src", dst: str = "dst",
-    max_iter: int = 15,
 ) -> DataFrame:
     """Connected components of an undirected graph by iterative
     min-label propagation (Hash-to-Min style). ``edges`` needs one row
     per edge (either direction); returns ``(node, component)`` where
     ``component`` is the smallest node id in the component.
 
-    Each round costs one join + one partial-aggregated min (two
-    shuffles of (long, long) rows only); rounds ~= component diameter.
-    Convergence is the monotone sum(label) fixpoint — one scalar agg
-    per round. Lineage is cut with localCheckpoint so the plan stays
-    flat across iterations. For web-scale graphs with deep components,
-    swap in large-star/small-star (alternating contraction halves the
-    diameter per round); dedup-cluster graphs are shallow, so plain
-    propagation converges in a handful of rounds.
+    Runs on :func:`iterate` to the fixpoint: each round costs one join
+    + one partial-aggregated min (shuffles of (long, long) rows only),
+    and ``until`` is the scalar ``sum(label)``, which falls strictly
+    every round until no label changes — so rounds ~= component
+    diameter, with no round cap to cut a deep component short. The
+    symmetric edge list is hash-partitioned on the join key ``_d``, so
+    the pinned edges are read in place every round. For web-scale
+    graphs with deep components, swap in large-star/small-star
+    (alternating contraction halves the diameter per round);
+    dedup-cluster graphs are shallow, so plain propagation converges in
+    a handful of rounds.
     """
     und = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
     und = und.union(und.select(F.col("_d").alias("_s"),
                                F.col("_s").alias("_d")))
-    # hash-partition the checkpointed edge list on the per-round JOIN
-    # key (r12 optimization): the checkpoint preserves partitioning, so
-    # every round's und⋈labels join reads the edges in place instead of
-    # re-exchanging them each round (guide §2.4; the q_bfs_levels /
-    # q_shortest_path_k pattern). Labels are independent of
-    # partitioning, so results are unchanged.
-    npart = _resolve_partitions(edges)
-    und = und.distinct().repartition(npart, "_d").localCheckpoint(eager=True)
-
+    und = und.distinct().repartition(_resolve_partitions(edges), "_d")
     labels = (
         und.select(F.col("_s").alias("node")).distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
     )
-    prev_sum = labels.agg(F.sum("label")).first()[0]
-    for _ in range(max_iter):
+
+    def propagate(labels: DataFrame, _k: int) -> DataFrame:
         neighbor_min = (
             und.join(labels, und["_d"] == labels["node"])
             .groupBy(F.col("_s").alias("node"))
             .agg(F.min("label").alias("nmin"))
         )
-        labels = (
-            labels.join(neighbor_min, "node", "left")
-            .select("node", F.least("label", "nmin").alias("label"))
-            .localCheckpoint(eager=True)
+        return labels.join(neighbor_min, "node", "left").select(
+            "node", F.least("label", "nmin").alias("label")
         )
-        cur_sum = labels.agg(F.sum("label")).first()[0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
+
+    labels = iterate(
+        und, labels, propagate,
+        until=lambda s: s.agg(F.sum("label")).first()[0],
+    )
     return labels.select("node", F.col("label").alias("component"))
 
 

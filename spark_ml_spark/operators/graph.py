@@ -104,9 +104,9 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume. Each iteration is then one equi-join edges⋈ranks (shuffle
     keyed on src) + one partial-aggregated per-dst sum — the standard
     distributed PageRank round; at web-graph scale the SAME loop runs
-    with ranks/edges as corpus-sized tables, per-round localCheckpoint
-    (the api.connected_components lineage discipline), and convergence
-    detection instead of a fixed count. Exactness: per-edge
+    with ranks/edges as corpus-sized tables on ``api.iterate`` (pinned
+    edges, one checkpoint per round, ``until`` for convergence detection
+    instead of a fixed count). Exactness: per-edge
     contributions quantize to integer nano-units BEFORE the per-node
     sum (order-free BIGINT adds); the oracle unrolls the identical
     {iters} steps."""

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from spark_ml_spark.api import _resolve_partitions, global_rank
+from spark_ml_spark.api import _resolve_partitions, global_rank, iterate
 from spark_ml_spark.io.sources import load
 from spark_ml_spark.operators.geo import _with_coords, _coord_exprs_sql
 from spark_ml_spark.operators.graph_metrics import _EDGES_SQL, _part_edges_sym
@@ -210,71 +210,43 @@ def q_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose key divides by ``_BFS_SEED_MOD`` (97), frontier expansion
     for ``_BFS_K`` (3) fixed levels, emitting each reached node's
     minimum distance. The Pregel step expressed as DataFrame joins:
-    level k+1 = (frontier ⋈ edges) minus visited, deduplicated — true
+    level k = (frontier ⋈ edges) minus visited, deduplicated — true
     BFS, each node expanded exactly once.
 
-    Scale shape: the edge list is built once (ONE shuffle — see
+    Scale shape: the edge list is built with ONE shuffle (see
     ``_part_edges_sym``'s fused in-row double-orientation pair
-    generation, r13) and persisted across the
-    3 iterations; each iteration is one shuffle join of an id-only
-    frontier against the edges plus one anti-join against the id-only
-    visited set. EVERY level's frontier is persisted too: each ``nxt``
-    feeds two consumers (the visited union AND the next level's join),
-    so without a per-level cache the whole prefix DAG re-executes once
-    per level — measured 12.4s → 3.0s isolated at sf0.1 when the r11
-    bench first exposed it (iterative-operator lesson: persist every
-    reused frontier, not just the invariant edge list; ``q_pagerank``
-    never hit this because its rank table feeds exactly one consumer
-    per step). Plan depth is fixed at 3 (unrolled) — no driver
-    collect, no unbounded lineage. The oracle's recursive CTE uses
-    UNION (distinct) so its per-level working set stays node-bounded
-    rather than path-counted.
+    generation), hash-partitioned on ``src``, the join key. The
+    ``_BFS_K`` rounds run on :func:`api.iterate`, which pins the edges
+    for the loop and checkpoints every round, so the rounds run while
+    the DataFrame is built and the returned plan reads only the last
+    checkpoint. The state is the id-only visited set ``(node, level)``;
+    round k's frontier is its ``level == k - 1`` slice, joined against
+    the pinned edges in place, then anti-joined against the visited
+    set. The oracle's recursive CTE uses UNION (distinct) so its
+    per-level working set stays node-bounded rather than path-counted.
 
     Cites ``Data_transform.py`` passim (no graph surface in the
     reference)."""
-    # fused symmetric edge build (r13, VERDICT r12 next-#1): both
-    # orientations generated in-row, ONE repartition(src) exchange,
-    # dedup in place — one fewer full-edge exchange than the r12
-    # distinct→union→repartition chain (see _part_edges_sym). The
-    # cache stays hash-partitioned on the per-level JOIN key, so each
-    # of the K frontier⋈edges joins reads it in place (guide §2.4;
-    # r12). Partition count follows the session conf via
-    # api._resolve_partitions (ADVICE r12: guard non-numeric conf),
-    # not a local constant.
     npart = _resolve_partitions(load(spark, sf_dir, "lineitem"))
-    edges = _part_edges_sym(spark, sf_dir, npart).persist()
-    # eagerly materialize the edge cache BEFORE the levels are planned
-    # (r13): an unmaterialized cache is an AdaptiveSparkPlan whose
-    # output partitioning is UNKNOWN at planning time, so a
-    # frontier⋈edges join that outgrows broadcast would bake in an
-    # ENSURE_REQUIREMENTS re-exchange of the full edge list per level
-    # (the q_shortest_path_k finding — its plan showed exactly that).
-    # One count() job pins hashpartitioning(src) as a fact of the
-    # cached data; the K expansion joins then read it in place.
-    edges.count()
-    seeds = (
+    edges = _part_edges_sym(spark, sf_dir, npart)
+    visited = (
         edges.select(F.col("src").alias("node")).distinct()
         .where(F.col("node") % _BFS_SEED_MOD == 0)
+        .select("node", F.lit(0).cast("bigint").alias("level"))
     )
-    visited = seeds.select(
-        "node", F.lit(0).cast("bigint").alias("level")
-    ).persist()
-    frontier = visited.select("node")
-    out = visited
-    for k in range(1, _BFS_K + 1):
-        # persist each level: nxt feeds BOTH the visited union and the
-        # next join — unpersisted, the prefix DAG re-executes per level
+
+    def expand(visited: DataFrame, k: int) -> DataFrame:
+        frontier = visited.where(F.col("level") == k - 1).select("node")
         nxt = (
             frontier.join(edges, frontier.node == edges.src)
             .select(F.col("dst").alias("node"))
             .distinct()
-            .join(out.select("node"), "node", "left_anti")
+            .join(visited.select("node"), "node", "left_anti")
             .select("node", F.lit(k).cast("bigint").alias("level"))
-            .persist()
         )
-        out = out.union(nxt)
-        frontier = nxt.select("node")
-    return out.orderBy("node")
+        return visited.union(nxt)
+
+    return iterate(edges, visited, expand, rounds=_BFS_K).orderBy("node")
 
 
 ORACLE_BFS_LEVELS = rf"""

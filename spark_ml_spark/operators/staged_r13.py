@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_ml_spark.api import _resolve_partitions
+from spark_ml_spark.api import _resolve_partitions, iterate
 from spark_ml_spark.io.sources import load
 
 #: one day in microseconds (pure integer DIV bucketing on both engines)
@@ -517,30 +517,21 @@ def q_shortest_path_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the edge build is one shuffle (group lineitem by
     order key, chain pairs generated IN-ROW from the sorted basket
     array) with edge costs attached by two BROADCAST price lookups
-    (part is the small dim — no pair-count shuffle), persisted across
-    rounds. Each round is one shuffle join of the (node, key)
-    best-table against the edges plus one map-side-combinable min-agg
-    — the textbook distributed Bellman-Ford round, structurally
-    identical to the oracle's unrolled CTEs. Each round's best-table
-    is persisted: it feeds two consumers (the relaxation join and the
-    min-union), so an unpersisted chain re-executes the prefix DAG
-    once per round (the ``q_bfs_levels`` iterative-operator lesson,
-    r11 bench; a frontier-only worklist variant was measured and
-    REJECTED during staging — on this weight structure ~90% of nodes
-    improve every round, so the pruning joins cost more than they
-    save). All K+1 best-tables stay lazily persisted (r12: the former
-    per-round eager ``count()`` + unpersist barrier cost ~0.7 s in K
-    extra blocking jobs; the cached tables are node-sized and the
-    per-query ``spark.catalog.clearCache()`` both bench.py and
-    tools/driver_check.py run releases everything — see the in-loop
-    comment). The cached edge list is hash-partitioned on ``src`` so
-    every relaxation join reads it in place with no per-round
-    exchange. Plan depth fixed at K
-    (unrolled, no driver collect of result rows, no unbounded
-    lineage). Extends ``q_bfs_levels`` (unweighted levels)
-    to weighted costs; the ~6s sf0.1 cost is the basket-graph build
-    plus K edge-mass relaxation passes — the ``q_triangle_count``
-    family cost, not a scale hazard.
+    (part is the small dim — no pair-count shuffle), hash-partitioned
+    on ``src``, the join key. The ``_SP_K`` rounds run on
+    :func:`api.iterate`, which pins the edges for the loop and
+    checkpoints every round's (node, key) best-table, so the rounds run
+    while the DataFrame is built and the returned plan reads only the
+    last checkpoint. Each round is one join of the best-table against
+    the pinned edges, read in place, plus one map-side-combinable
+    min-agg — the textbook distributed Bellman-Ford round, structurally
+    identical to the oracle's unrolled CTEs. (A frontier-only worklist
+    variant was measured and rejected during staging: on this weight
+    structure ~90% of nodes improve every round, so the pruning joins
+    cost more than they save.) Extends ``q_bfs_levels`` (unweighted
+    levels) to weighted costs; the ~6s sf0.1 cost is the basket-graph
+    build plus K edge-mass relaxation passes — the
+    ``q_triangle_count`` family cost, not a scale hazard.
 
     Cites ``Data_transform.py`` passim (no graph surface in the
     reference)."""
@@ -593,28 +584,15 @@ def q_shortest_path_k(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.abs(F.col("cs") - F.col("cd")) + F.lit(1))
             .cast("bigint").alias("w"),
         )
-        .persist()
     )
-    # eagerly materialize the edge cache BEFORE the relaxation rounds
-    # are planned (r13): an unmaterialized cache is an AdaptiveSparkPlan
-    # whose output partitioning is UNKNOWN at planning time, so every
-    # downstream best⋈edges join bakes in an ENSURE_REQUIREMENTS
-    # re-exchange of the full edge list — the repartition-in-place
-    # design never engaged in a fully lazy plan (plan-verified: the
-    # per-round Exchange hashpartitioning(src) nodes disappear only
-    # when the cache is final before the consumer plans). One count()
-    # job pins hashpartitioning(src) as a fact of the cached data; the
-    # K relaxation joins then read it in place with no exchange.
-    edges.count()
-    seeds = (
+    best = (
         edges.select(F.col("src").alias("node"))
         .where(F.col("node") % _SP_SEED_MOD == 0)
         .distinct()
+        .select("node", F.lit(0).cast("bigint").alias("key"))
     )
-    best = seeds.select(
-        "node", F.lit(0).cast("bigint").alias("key")
-    ).persist()
-    for _ in range(_SP_K):
+
+    def relax(best: DataFrame, _k: int) -> DataFrame:
         cand = (
             best.join(edges, best.node == edges.src)
             .select(
@@ -623,31 +601,9 @@ def q_shortest_path_k(spark: SparkSession, sf_dir: str) -> DataFrame:
                  + (F.col("key") % 8 + 1)).alias("key"),
             )
         )
-        best = (
-            best.union(cand)
-            .groupBy("node")
-            .agg(F.min("key").alias("key"))
-            .persist()
-        )
-        # r12 optimization: the former per-round eager count() +
-        # unpersist(prev) barrier (ADVICE r11's bounded-footprint
-        # discipline) cost ~0.7 s/query in K extra blocking jobs. The
-        # persists stay LAZY now: the K+1 cached best-tables are
-        # node-sized (id+key only, ≤|V| rows each — bytes, not a
-        # hazard), and both graded harnesses (bench.py,
-        # tools/driver_check.py) run spark.catalog.clearCache() after
-        # every query, so nothing accumulates across the shared
-        # session. An in-loop unpersist without the eager count would
-        # re-execute the whole prefix DAG per round — the q_bfs_levels
-        # lesson — so it is lazy-persist-all, not unpersist-lazy.
-    # r13 (ADVICE r12 medium): the former trailing edges.unpersist()
-    # ran at PLAN-BUILD time — every persist above is lazy, so the
-    # edges cache entry was dropped before any job executed and each
-    # relaxation join rebuilt the edge subtree from parquet at
-    # execution time, defeating both the persist and the
-    # repartition-in-place design. The edges cache now lives until the
-    # harness-level spark.catalog.clearCache(), exactly like the K+1
-    # best-tables (same bounded-footprint reasoning above).
+        return best.union(cand).groupBy("node").agg(F.min("key").alias("key"))
+
+    best = iterate(edges, best, relax, rounds=_SP_K)
     return best.select(
         "node",
         F.expr("key div 8").cast("bigint").alias("path_cost"),

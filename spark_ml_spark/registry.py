@@ -14,6 +14,11 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+#: A query function builds and returns the query's DataFrame. It may run
+#: eager jobs while it builds (the per-round checkpoints of
+#: ``api.iterate``, for example), and it must leave nothing in Spark's
+#: cache manager once it returns; the caller collects or writes the
+#: result without any ``clearCache()``.
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}

@@ -48,10 +48,11 @@ def duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
     params=[(n, aqe) for n in (1, 3, 32) for aqe in ("true", "false")],
     ids=lambda p: f"sp{p[0]}-aqe_{p[1]}",
 )
-def rank_confs(spark, request):
+def invariant_confs(spark, request):
     """Runs a test once per shuffle-partition count × AQE setting — confs
-    that must not change a two-phase rank — on the shared session, and
-    restores the session's own values afterwards."""
+    that must not change any result (two-phase ranks, iterative graph
+    loops) — on the shared session, and restores the session's own
+    values afterwards."""
     n, aqe = request.param
     confs = {
         "spark.sql.shuffle.partitions": str(n),

@@ -5,7 +5,9 @@ with hand-computable expected results."""
 from __future__ import annotations
 
 import datetime
+import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from spark_ml_spark import api
@@ -107,7 +109,7 @@ def test_l1_normalize_zero_guard(spark):
     assert fracs[("b", 0.0)] is None  # zero-sum group -> NULL, not div/0
 
 
-def test_connected_components_chain_triangle_singleton(spark):
+def test_connected_components_chain_triangle_singleton(spark, invariant_confs):
     # chain 1-2-3 and triangle 10-11-12 plus edge 11-13 => two components;
     # node 20-20 self edge stays its own component
     edges = spark.createDataFrame(
@@ -118,13 +120,76 @@ def test_connected_components_chain_triangle_singleton(spark):
     assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 13: 10, 20: 20}
 
 
-def test_connected_components_deep_chain(spark):
+def test_connected_components_deep_chain(spark, invariant_confs):
     # diameter-9 path exercises multi-round convergence
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 10)], "src long, dst long"
     )
     out = {r.node: r.component for r in api.connected_components(edges).collect()}
     assert out == {i: 1 for i in range(1, 11)}
+
+
+def test_connected_components_diameter_beyond_15(spark):
+    # a diameter-19 path: propagation needs 19 rounds, more than any
+    # fixed round cap of 15 would allow
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 20)], "src long, dst long"
+    )
+    out = {r.node: r.component for r in api.connected_components(edges).collect()}
+    assert out == {i: 1 for i in range(1, 21)}
+
+
+def test_iterate_requires_exactly_one_stop_rule(spark):
+    df = spark.range(3)
+    with pytest.raises(ValueError):
+        api.iterate(df, df, lambda s, k: s)
+    with pytest.raises(ValueError):
+        api.iterate(df, df, lambda s, k: s, rounds=2, until=lambda s: 0)
+
+
+def test_iterate_reads_pinned_edges_in_place(spark):
+    """Under AQE with broadcast joins off, every round's state ⋈ edges
+    join reads the pinned, src-partitioned edge list with no exchange on
+    the edge side (a checkpointed edge list loses its partitioning under
+    AQE and is re-exchanged every round), and the loop leaves nothing in
+    Spark's cache manager."""
+    confs = {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }
+    saved = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        edges = spark.range(400).select(
+            (F.col("id") % 50).alias("src"), (F.col("id") * 7 % 50).alias("dst")
+        ).repartition(n, "src")
+        state = spark.range(50).select(
+            F.col("id").alias("node"), F.lit(0).alias("hits")
+        )
+        plans = []
+
+        def step(state, k):
+            joined = state.join(edges, state.node == edges.src)
+            joined.collect()
+            plans.append(joined._jdf.queryExecution().executedPlan().toString())
+            return joined.groupBy("node").agg(F.count("*").alias("hits"))
+
+        out = api.iterate(edges, state, step, rounds=2)
+        assert out.count() == 50
+        cache = spark._jsparkSession.sharedState().cacheManager()
+        assert cache.numCachedEntries() == 0
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert len(plans) == 2
+    for plan in plans:
+        assert "InMemoryTableScan" in plan
+        assert not re.search(
+            r"Exchange hashpartitioning\(src#\d+L?, \d+\), ENSURE_REQUIREMENTS",
+            plan,
+        ), plan
 
 
 def test_csv_multiline_roundtrip(spark, tmp_path):

@@ -164,17 +164,17 @@ def test_domain_mix_shares_sum_to_one(spark, sf_dir):
     assert abs(sum(r.token_share for r in rows) - 1.0) < 1e-3
 
 
-# each example runs once per rank_confs cell, so fewer examples per cell
+# each example runs once per invariant_confs cell, so fewer examples per cell
 RANK_SETTINGS = settings(SETTINGS, max_examples=5)
 
 
 @given(st.lists(st.integers(min_value=-1000, max_value=1000),
                 min_size=1, max_size=60))
 @RANK_SETTINGS
-def test_global_rank_matches_sorted_enumerate(spark, rank_confs, vals):
+def test_global_rank_matches_sorted_enumerate(spark, invariant_confs, vals):
     """api.global_rank (two-phase, no single-partition window) must equal
     plain sorted-order enumeration for any multiset of keys, with the id
-    tiebreaker making the order total, under every rank_confs cell."""
+    tiebreaker making the order total, under every invariant_confs cell."""
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vals)], "id long, v long"
     )
@@ -197,10 +197,10 @@ def test_global_rank_matches_sorted_enumerate(spark, rank_confs, vals):
     st.integers(min_value=0, max_value=100)),
     min_size=1, max_size=60))
 @RANK_SETTINGS
-def test_global_prefix_sum_matches_sorted_cumsum(spark, rank_confs, pairs):
+def test_global_prefix_sum_matches_sorted_cumsum(spark, invariant_confs, pairs):
     """api.global_prefix_sum must equal a plain sorted-order running sum
     for any multiset of (key, weight), with the id tiebreaker making the
-    order total, under every rank_confs cell."""
+    order total, under every invariant_confs cell."""
     df = spark.createDataFrame(
         [(i, v, w) for i, (v, w) in enumerate(pairs)],
         "id long, v long, w long",

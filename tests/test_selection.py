@@ -22,10 +22,10 @@ SF = "/root/testdata/sf0.001"
 # grouped_rank primitive
 # --------------------------------------------------------------------------
 
-def test_grouped_rank_matches_plain_window(spark, rank_confs):
+def test_grouped_rank_matches_plain_window(spark, invariant_confs):
     """Two-phase grouped rank == single-window row_number on a skewed
     frame (one giant group, one tiny, one singleton, and a NULL group),
-    under every rank_confs cell."""
+    under every invariant_confs cell."""
     rows = [("a", i, i % 7) for i in range(200)] + [
         ("b", i, 3 - i) for i in range(4)
     ] + [("c", 0, 99), (None, 0, 5), (None, 1, 5)]

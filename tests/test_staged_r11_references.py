@@ -68,7 +68,7 @@ def test_pip_expression_matches_reference(duck, px, py, pid):
 
 # ---------------------------------------------------------------- bfs
 
-def test_bfs_levels_match_python_bfs(spark, duck, sf_dir):
+def test_bfs_levels_match_python_bfs(spark, duck, sf_dir, invariant_confs):
     edges = duck.execute(
         "SELECT DISTINCT least(x.l_partkey, y.l_partkey) AS a,"
         "       greatest(x.l_partkey, y.l_partkey) AS b"

@@ -188,7 +188,7 @@ def test_ipf_raking_matches_pure_python(spark, duck, sf_dir):
     assert got == w
 
 
-def test_shortest_path_matches_pure_python(spark, duck, sf_dir):
+def test_shortest_path_matches_pure_python(spark, duck, sf_dir, invariant_confs):
     baskets = duck.execute(
         "SELECT list_sort(list_distinct(list(l_partkey))) FROM lineitem"
         " GROUP BY l_orderkey"

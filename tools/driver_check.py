@@ -4,7 +4,9 @@
 every ``queries()[name]`` at sf0.01 side-by-side with its
 ``oracle_sql()[name]`` in DuckDB and compare row-count + column names +
 order-insensitive value hash. Queries without oracle SQL get the weaker
-rows-only check.
+rows-only check. After each query it prints how many entries the query
+left in Spark's cache manager (before clearing it), and at the end one
+line naming every query that left any.
 
 Usage: python tools/driver_check.py [sf_dir] [query ...]
 """
@@ -133,6 +135,8 @@ def main() -> None:
         n = len(e.entry(spark).collect())
         print(f"entry(): {n} rows {'OK' if n >= 0 else 'FAIL'}")
 
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    leaks: dict[str, int] = {}
     passed = failed = rows_only = skipped = 0
     for name in sorted(queries):
         if only and name not in only:
@@ -147,11 +151,14 @@ def main() -> None:
             failed += 1
             continue
         finally:
-            # queries that persist() intermediates (iterative graph ops,
-            # LSH feature frames) leave them resident after the collect;
-            # drop them so a 366-query pass doesn't accumulate cached
-            # relations in the shared session (ADVICE r11) — the same
-            # per-query protocol bench.py runs
+            # a query should leave nothing in the cache manager; report
+            # what it left, then drop it so a full pass doesn't
+            # accumulate cached relations in the shared session — the
+            # same per-query protocol bench.py runs
+            left = cache.numCachedEntries()
+            print(f"cache {name}: {left} entries left")
+            if left:
+                leaks[name] = left
             spark.catalog.clearCache()
         if name not in oracles:
             # The driver still canonicalizes rows-only results through
@@ -254,7 +261,9 @@ def main() -> None:
             print(f"ok    {name}: {len(spdf)} rows{tag}")
             passed += 1
 
-    print(f"\n{passed} oracle-ok, {rows_only} rows-only, {failed} FAILED"
+    print("\ncache leaks: " + (" ".join(
+        f"{n}={k}" for n, k in leaks.items()) or "none"))
+    print(f"{passed} oracle-ok, {rows_only} rows-only, {failed} FAILED"
           + (f", {skipped} oracle-timeout-skipped" if skipped else ""))
     spark.stop()
     sys.exit(1 if failed else 0)
