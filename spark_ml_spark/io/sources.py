@@ -10,12 +10,25 @@ built in; Catalyst pushes projection into the scan; no extra
 Parquet (the driver's test tables and the only sane format at 100 TB) is
 self-describing columnar with predicate pushdown, column pruning, and
 row-group skipping — the default source here.
+
+Relays: the other source formats (CSV, JSON, ORC, text, partitioned
+parquet, stream replay files) are reached through derived copies of a
+fixture table written once under the repo-local ``.cache/`` by
+:func:`relay`, keyed by :func:`fixture_key`. A relay directory exists
+only once it is complete: it is written into a fresh temp dir under
+``.cache/`` and renamed into place. Concurrent writers each write their
+own copy and the first rename wins; nobody waits or locks. A relay holds
+nothing tied to the checkout's path, so a copied or moved checkout
+reuses it as is.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+import shutil
+import tempfile
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -84,12 +97,12 @@ _CACHE_DIR = os.path.join(
 
 
 def fixture_key(sf_dir: str, *tables: str) -> str:
-    """Cache key for a relay derived from fixture tables: fingerprints
-    CONTENT (mtime_ns + size per table), not just the path. The driver
-    regenerates sf dirs in place between rounds (r3 changed events.ts
-    from TIMESTAMP(NANOS) to naive micros), and a path-only key keeps
-    serving the previous round's relay against a fresh oracle
-    (ADVICE r2, stream_queries.py:385)."""
+    """Cache key for a relay derived from fixture tables: hashes the
+    absolute sf path plus each table file's ``mtime_ns`` and size (a
+    stat, not a read of the content). The driver regenerates sf dirs in
+    place between rounds (r3 changed events.ts from TIMESTAMP(NANOS) to
+    naive micros), and a path-only key keeps serving the previous
+    round's relay against a fresh oracle (ADVICE r2)."""
     h = hashlib.md5(os.path.abspath(sf_dir).encode())
     for t in tables:
         st = os.stat(os.path.join(sf_dir, f"{t}.parquet"))
@@ -97,31 +110,57 @@ def fixture_key(sf_dir: str, *tables: str) -> str:
     return h.hexdigest()[:10]
 
 
+def relay(name: str, key: str, write: Callable[[str], None]) -> str:
+    """Path of the write-once relay ``<.cache>/<name>_<key>``, calling
+    ``write(tmp)`` to build it if it is missing. ``write`` fills the
+    fresh, empty directory it is given; it is then renamed into place,
+    so the relay never exists half-written. A writer that loses the
+    rename to a concurrent one keeps the winner's relay; if ``write``
+    raises, its temp dir is removed and the error propagates. A killed
+    writer leaves only a ``.<name>_<key>-*`` temp dir behind."""
+    out = os.path.join(_CACHE_DIR, f"{name}_{key}")
+    if os.path.isdir(out):
+        return out
+    os.makedirs(_CACHE_DIR, exist_ok=True)
+    # same filesystem as ``out``, so the rename is atomic
+    tmp = tempfile.mkdtemp(prefix=f".{name}_{key}-", dir=_CACHE_DIR)
+    try:
+        write(tmp)
+        try:
+            os.rename(tmp, out)
+        except OSError:
+            # another writer renamed first; its relay is as good as ours
+            if not os.path.isdir(out):
+                raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return out
+
+
 def documents_csv_path(spark: SparkSession, sf_dir: str) -> str:
     """Materialize ``documents`` as CSV once per sf_dir (repo-local cache)
     so the CSV scan path (reference ``Data_transform.py:32``) can be
     exercised — all driver tables are parquet, the reference's source
     format is CSV (FIXTURES.md §B4)."""
-    key = fixture_key(sf_dir, "documents")
-    out = os.path.join(_CACHE_DIR, f"documents_csv_{key}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        (load(spark, sf_dir, "documents")
-         .write.mode("overwrite")
-         .option("header", True)
-         .option("quote", '"')
-         .option("escape", "\\")
-         .csv(out))
-    return out
+    return relay(
+        "documents_csv", fixture_key(sf_dir, "documents"),
+        lambda tmp: (load(spark, sf_dir, "documents")
+                     .write.mode("overwrite")
+                     .option("header", True)
+                     .option("quote", '"')
+                     .option("escape", "\\")
+                     .csv(tmp)),
+    )
 
 
 def documents_json_path(spark: SparkSession, sf_dir: str) -> str:
     """Materialize ``documents`` as JSON-lines once per sf_dir — the third
     source format (parquet/CSV/JSONL) a production landing zone sees."""
-    key = fixture_key(sf_dir, "documents")
-    out = os.path.join(_CACHE_DIR, f"documents_json_{key}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        load(spark, sf_dir, "documents").write.mode("overwrite").json(out)
-    return out
+    return relay(
+        "documents_json", fixture_key(sf_dir, "documents"),
+        lambda tmp: load(spark, sf_dir, "documents")
+        .write.mode("overwrite").json(tmp),
+    )
 
 
 def read_documents_json(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -164,11 +203,7 @@ def dirty_orders_csv_path(spark: SparkSession, sf_dir: str) -> str:
     function, so the EXPECTED good/bad partition is recomputable from
     the clean parquet without parsing the dirty file — that recompute
     is ``q_csv_malformed``'s oracle."""
-    from pyspark.sql import functions as F
-
-    key = fixture_key(sf_dir, "orders")
-    out = os.path.join(_CACHE_DIR, f"orders_dirty_csv_{key}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    def write(tmp: str) -> None:
         o = load(spark, sf_dir, "orders")
         line = F.concat_ws(
             ",",
@@ -188,5 +223,6 @@ def dirty_orders_csv_path(spark: SparkSession, sf_dir: str) -> str:
         (o.select(
             F.when(bad, F.concat(line, F.lit(",XTRA"))).otherwise(line)
             .alias("value"))
-         .write.mode("overwrite").text(out))
-    return out
+         .write.mode("overwrite").text(tmp))
+
+    return relay("orders_dirty_csv", fixture_key(sf_dir, "orders"), write)

@@ -30,7 +30,12 @@ from spark_ml_spark.functions.exact import (
     exact_sum,
     exact_sum_over,
 )
-from spark_ml_spark.io.sources import load, read_documents_csv
+from spark_ml_spark.io.sources import (
+    fixture_key,
+    load,
+    read_documents_csv,
+    relay,
+)
 from spark_ml_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -71,14 +76,11 @@ def q_orc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC scan (the other columnar format Spark ships natively):
     parquet → ORC round-trip, aggregate — ORC gets the same pushdown /
     pruning treatment from Catalyst as parquet."""
-    import os
-
-    from spark_ml_spark.io.sources import _CACHE_DIR, fixture_key
-
-    key = fixture_key(sf_dir, "documents")
-    out = os.path.join(_CACHE_DIR, f"documents_orc_{key}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        load(spark, sf_dir, "documents").write.mode("overwrite").orc(out)
+    out = relay(
+        "documents_orc", fixture_key(sf_dir, "documents"),
+        lambda tmp: load(spark, sf_dir, "documents")
+        .write.mode("overwrite").orc(tmp),
+    )
     return (
         spark.read.orc(out)
         .groupBy("lang")
@@ -840,20 +842,14 @@ def q_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scan's PartitionFilters skip every other year's files entirely.
     At 100 TB this IS the dominant optimization: partition layout turns a
     full-table scan into a directory listing + one partition read."""
-    import os
-
-    from spark_ml_spark.io.sources import _CACHE_DIR, fixture_key
-
-    key = fixture_key(sf_dir, "orders")
-    out = os.path.join(_CACHE_DIR, f"orders_by_year_{key}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        (
-            load(spark, sf_dir, "orders")
-            .withColumn("yr", F.year("o_orderdate"))
-            .write.mode("overwrite")
-            .partitionBy("yr")
-            .parquet(out)
-        )
+    out = relay(
+        "orders_by_year", fixture_key(sf_dir, "orders"),
+        lambda tmp: load(spark, sf_dir, "orders")
+        .withColumn("yr", F.year("o_orderdate"))
+        .write.mode("overwrite")
+        .partitionBy("yr")
+        .parquet(tmp),
+    )
     return (
         spark.read.parquet(out)
         .filter(F.col("yr") == 1995)

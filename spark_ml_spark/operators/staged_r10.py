@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from spark_ml_spark.io.sources import load
+from spark_ml_spark.io.sources import fixture_key, load, relay
 
 #: approx_percentile accuracy parameter; published rank-error bound is
 #: eps = 1/accuracy (Spark docs: ApproximatePercentile guarantees a
@@ -597,16 +597,11 @@ def q_text_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: text write/scan are trivially splittable (one line =
     one record, no parse state across splits); the profile is one
     map-side-combined global aggregate."""
-    import os
-
-    from spark_ml_spark.io.sources import _CACHE_DIR, fixture_key
-
-    key = fixture_key(sf_dir, "documents")
-    out = os.path.join(_CACHE_DIR, f"documents_text_{key}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        load(spark, sf_dir, "documents").select("text").write.mode(
-            "overwrite"
-        ).text(out)
+    out = relay(
+        "documents_text", fixture_key(sf_dir, "documents"),
+        lambda tmp: load(spark, sf_dir, "documents").select("text")
+        .write.mode("overwrite").text(tmp),
+    )
     lines = spark.read.text(out)
     return lines.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_lines"),
@@ -634,19 +629,13 @@ def _disorder_replay_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     table lands as three single-file micro-batches — middle third
     first, newest third second, OLDEST third LAST — so a watermark
     advanced by batch 2 has already passed batch 3's rows. The layout
-    is cached under ``.cache/`` keyed by ``fixture_key`` (content
-    fingerprint — the driver regenerates fixtures between rounds) and
-    replayed via ``maxFilesPerTrigger=1`` in modification-time order,
-    which the sequential writes guarantee matches batch order."""
-    import os
-    import shutil
-
-    from spark_ml_spark.io.sources import _CACHE_DIR, fixture_key
-
+    is a relay keyed by ``fixture_key`` (the driver regenerates fixtures
+    between rounds) and is replayed via ``maxFilesPerTrigger=1`` in
+    modification-time order, which the sequential writes guarantee
+    matches batch order."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    key = fixture_key(sf_dir, "events")
-    out = os.path.join(_CACHE_DIR, f"events_disorder_{key}")
-    if not os.path.exists(os.path.join(out, "_DONE")):
+
+    def write(tmp: str) -> None:
         ev = load(spark, sf_dir, "events").select("ts", "event_id")
         b = ev.select(
             F.percentile_approx("ts", 1 / 3).alias("t1"),
@@ -658,22 +647,14 @@ def _disorder_replay_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             ev.filter(F.col("ts") > b.t2),
             ev.filter(F.col("ts") <= b.t1),
         ]
-        os.makedirs(out, exist_ok=True)
         for i, p in enumerate(parts):
-            tmp = os.path.join(out, f"tmp{i}")
-            p.coalesce(1).write.mode("overwrite").parquet(tmp)
-            src = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-            os.rename(os.path.join(tmp, src),
-                      os.path.join(out, f"batch_{i}.parquet"))
-            # drop the writer scaffolding (_SUCCESS, .crc): litter, and a
-            # hazard if the glob filter ever loosens (self-review r9)
-            shutil.rmtree(tmp)
-        open(os.path.join(out, "_DONE"), "w").close()
+            p.coalesce(1).write.parquet(f"{tmp}/batch_{i}")
+
+    out = relay("events_replay", fixture_key(sf_dir, "events"), write)
     return (
         spark.readStream.schema("ts timestamp, event_id long")
         .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "batch_*.parquet")
-        .parquet(out)
+        .parquet(f"{out}/batch_*/*.parquet")
     )
 
 

@@ -35,7 +35,7 @@ import random
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_ml_spark.io.sources import _CACHE_DIR
+from spark_ml_spark.io.sources import relay
 
 SEED = 42
 
@@ -58,29 +58,26 @@ N_SURVEYS = 100
 ROWS_PER_SURVEY = 40  # ref: 546,100 / 13,453 ≈ 40.6
 
 
-def _fixture_dir() -> str:
-    return os.path.join(_CACHE_DIR, "fish_surveys")
-
-
 def generate_fixture() -> tuple[str, str]:
-    """Write the fish_surveys CSV + families vocabulary file (idempotent,
-    seed=42). Returns (csv_path, families_path)."""
-    out = _fixture_dir()
-    csv_path = os.path.join(out, "fish_surveys.csv")
-    fam_path = os.path.join(out, "familias.txt")
-    if os.path.exists(csv_path) and os.path.exists(fam_path):
-        return csv_path, fam_path
-    os.makedirs(out, exist_ok=True)
+    """Write the fish_surveys CSV + families vocabulary file once, as a
+    relay keyed by the seed (the fixture is a pure function of this
+    module's constants). Returns (csv_path, families_path)."""
+    out = relay("fish_surveys", f"seed{SEED}", _write_fixture)
+    return (os.path.join(out, "fish_surveys.csv"),
+            os.path.join(out, "familias.txt"))
+
+
+def _write_fixture(out: str) -> None:
     rng = random.Random(SEED)
     all_families = list(KNOWN_FAMILIES) + list(UNKNOWN_FAMILIES)
 
-    with open(fam_path, "w") as f:
+    with open(os.path.join(out, "familias.txt"), "w") as f:
         for i, fam in enumerate(KNOWN_FAMILIES):
             # trailing whitespace on some lines exercises strip()
             # (reference Data_transform.py:82)
             f.write(fam + ("  " if i % 7 == 0 else "") + "\n")
 
-    with open(csv_path, "w", newline="") as f:
+    with open(os.path.join(out, "fish_surveys.csv"), "w", newline="") as f:
         w = csv.writer(f, quoting=csv.QUOTE_MINIMAL)
         w.writerow(RLS_COLUMNS)
         fid = 0
@@ -106,7 +103,6 @@ def generate_fixture() -> tuple[str, str]:
                     str(rng.randint(1, 4)), str(total), f"Diver{s % 7}",
                     f"POINT ({lon} {lat})",
                 ])
-    return csv_path, fam_path
 
 
 def load_families(spark: SparkSession, fam_path: str) -> DataFrame:

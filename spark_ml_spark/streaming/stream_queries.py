@@ -286,17 +286,20 @@ def q_stream_to_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     files; the oracle is the equivalent batch filter — streaming a
     historical dataset through the sink must land exactly the batch
     answer. Stateless ⇒ no watermark needed and append mode is natural;
-    run-to-run the checkpoint prevents double-processing."""
+    within a run the checkpoint prevents double-processing."""
     import os
+    import shutil
 
     from spark_ml_spark.io.sources import _CACHE_DIR, fixture_key
 
-    # content-fingerprinted key (ADVICE r2): a regenerated events fixture
-    # must invalidate both the committed files and the offset checkpoint,
-    # else the re-read serves the previous round's filtered rows
     key = fixture_key(sf_dir, "events")
     out = os.path.join(_CACHE_DIR, f"stream_parquet_{key}")
     ckpt = os.path.join(_CACHE_DIR, f"stream_parquet_ckpt_{key}")
+    # cleared before each run, not reused: the sink's file log
+    # (``_spark_metadata``) stores absolute paths, so a sink carried into a
+    # copied or moved checkout lists files that are not there
+    for d in (out, ckpt):
+        shutil.rmtree(d, ignore_errors=True)
     stream = _read_events_stream(spark, sf_dir)
     filtered = (
         stream.filter((F.col("event_type") == "purchase") & (F.col("value") > 50))
@@ -383,18 +386,14 @@ def q_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from spark_ml_spark.io.sources import _CACHE_DIR, fixture_key, load
+    from spark_ml_spark.io.sources import _CACHE_DIR, fixture_key, load, relay
 
-    # content-fingerprinted key (ADVICE r2): a regenerated events fixture
-    # must invalidate the re-laid 8-file source, else the stream replays
-    # stale parquet against a fresh oracle — r3's fixture regeneration
-    # did exactly that
     key = fixture_key(sf_dir, "events")
-    src = os.path.join(_CACHE_DIR, f"stream_upsert_src_{key}")
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        load(spark, sf_dir, "events").select("user_id", "value").repartition(
-            8
-        ).write.mode("overwrite").parquet(src)
+    src = relay(
+        "stream_upsert_src", key,
+        lambda tmp: load(spark, sf_dir, "events").select("user_id", "value")
+        .repartition(8).write.mode("overwrite").parquet(tmp),
+    )
 
     schema = T.StructType([
         T.StructField("user_id", T.LongType()),

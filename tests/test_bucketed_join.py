@@ -11,12 +11,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from spark_ml_spark.api import write_bucketed
-from spark_ml_spark.io.sources import _CACHE_DIR, load
+from spark_ml_spark.io.sources import load
 
 
 @pytest.fixture(scope="module")
-def bucketed_tables(spark, sf_dir):
-    base = os.path.join(_CACHE_DIR, "bucketed_test")
+def bucketed_tables(spark, sf_dir, tmp_path_factory):
+    base = str(tmp_path_factory.mktemp("bucketed_test"))
     write_bucketed(
         load(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_quantity", "l_extendedprice"

@@ -4,17 +4,14 @@ serve the artifact) the reference never had."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.feature import Normalizer, VectorAssembler
 from pyspark.ml.regression import RandomForestRegressor
 
-from spark_ml_spark.io.sources import _CACHE_DIR
 from spark_ml_spark.operators.ml import BRANDS, SEED, _BCOL, build_feature_table
 
 
-def test_pipeline_model_roundtrip(spark, sf_dir):
+def test_pipeline_model_roundtrip(spark, sf_dir, tmp_path):
     ft = build_feature_table(spark, sf_dir).withColumnRenamed("c_acctbal", "label")
     cols = [_BCOL[b] for b in BRANDS]
     pipe = Pipeline(stages=[
@@ -24,7 +21,7 @@ def test_pipeline_model_roundtrip(spark, sf_dir):
                               seed=SEED, numTrees=5, maxDepth=4),
     ])
     model = pipe.fit(ft)
-    path = os.path.join(_CACHE_DIR, "rf_model_roundtrip")
+    path = str(tmp_path / "rf_model_roundtrip")
     model.write().overwrite().save(path)
     reloaded = PipelineModel.load(path)
 
