@@ -9,7 +9,8 @@ built in; Catalyst pushes projection into the scan; no extra
 
 Parquet (the driver's test tables and the only sane format at 100 TB) is
 self-describing columnar with predicate pushdown, column pruning, and
-row-group skipping — the default source here.
+row-group skipping — the default source here. Every read declares its
+schema (:data:`SCHEMAS`) instead of inferring it from the footers.
 
 Relays: the other source formats (CSV, JSON, ORC, text, partitioned
 parquet, stream replay files) are reached through derived copies of a
@@ -41,51 +42,86 @@ TABLES = (
 )
 
 
-#: columns stored as TIMESTAMP(NANOS) in the driver's parquet — Spark has
-#: no nanosecond timestamp type, so these are read as long (via the
-#: ``nanosAsLong`` legacy conf) and truncated to microseconds, exactly what
-#: DuckDB's TIMESTAMP does with nanosecond input.
-_NANO_TS_COLUMNS = {"events": ("ts",)}
+#: the Spark schema of every table, declared so that no read of a fixture
+#: or of a relay derived from one runs a schema-inference job (SURVEY.md
+#: §1.2: the engine declares types instead of inferring; inferring a
+#: parquet schema costs one footer-reading job per read, an inferSchema
+#: pass over 100 TB of CSV a full extra read of the data). It is the arrow
+#: contract of ``tests/test_fixture_contract.py`` in Spark's types, every
+#: field nullable as Spark's own inference gives it: ``timestamp[us]`` is
+#: TIMESTAMP (LTZ, not NTZ) because ``unix_micros``/window arithmetic
+#: requires LTZ, and with the session pinned to UTC it equals DuckDB's
+#: ``epoch()`` over the naive fixture timestamps.
+SCHEMAS: dict[str, T.StructType] = {
+    name: T.StructType([T.StructField(c, t) for c, t in cols])
+    for name, cols in {
+        "region": [("r_regionkey", T.IntegerType()),
+                   ("r_name", T.StringType())],
+        "nation": [("n_nationkey", T.IntegerType()),
+                   ("n_name", T.StringType()),
+                   ("n_regionkey", T.IntegerType())],
+        "customer": [("c_custkey", T.LongType()),
+                     ("c_name", T.StringType()),
+                     ("c_nationkey", T.IntegerType()),
+                     ("c_acctbal", T.DoubleType()),
+                     ("c_mktsegment", T.StringType())],
+        "supplier": [("s_suppkey", T.LongType()),
+                     ("s_name", T.StringType()),
+                     ("s_nationkey", T.IntegerType()),
+                     ("s_acctbal", T.DoubleType())],
+        "part": [("p_partkey", T.LongType()),
+                 ("p_name", T.StringType()),
+                 ("p_brand", T.StringType()),
+                 ("p_type", T.StringType()),
+                 ("p_size", T.IntegerType()),
+                 ("p_retailprice", T.DoubleType())],
+        "orders": [("o_orderkey", T.LongType()),
+                   ("o_custkey", T.LongType()),
+                   ("o_orderstatus", T.StringType()),
+                   ("o_totalprice", T.DoubleType()),
+                   ("o_orderdate", T.TimestampType()),
+                   ("o_orderpriority", T.StringType())],
+        "lineitem": [("l_orderkey", T.LongType()),
+                     ("l_partkey", T.LongType()),
+                     ("l_suppkey", T.LongType()),
+                     ("l_linenumber", T.IntegerType()),
+                     ("l_quantity", T.DoubleType()),
+                     ("l_extendedprice", T.DoubleType()),
+                     ("l_discount", T.DoubleType()),
+                     ("l_tax", T.DoubleType()),
+                     ("l_returnflag", T.StringType()),
+                     ("l_linestatus", T.StringType()),
+                     ("l_shipdate", T.TimestampType())],
+        "events": [("event_id", T.LongType()),
+                   ("ts", T.TimestampType()),
+                   ("user_id", T.LongType()),
+                   ("event_type", T.StringType()),
+                   ("value", T.DoubleType()),
+                   ("props", T.StringType())],
+        "documents": [("doc_id", T.LongType()),
+                      ("text", T.StringType()),
+                      ("lang", T.StringType()),
+                      ("source", T.StringType()),
+                      ("n_chars", T.LongType())],
+        "embeddings": [("vec_id", T.LongType()),
+                       ("embedding", T.ArrayType(T.FloatType())),
+                       ("label", T.IntegerType())],
+    }.items()
+}
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Columnar scan of one test table. Parquet is self-describing, so no
-    inference job is needed; filters/projections placed on the result are
-    pushed into the scan by Catalyst (check ``PushedFilters`` in
-    ``.explain``)."""
+    """Columnar scan of one test table with its declared schema
+    (:data:`SCHEMAS`), so building the DataFrame runs no job: the footer
+    is read only when the scan executes. Filters/projections placed on
+    the result are pushed into the scan by Catalyst (check
+    ``PushedFilters`` in ``.explain``)."""
     # defensive: the driver's session may not be ours — epoch math on
-    # timestamp_ntz (unix_timestamp) follows the SESSION timezone, and the
-    # DuckDB oracle's epoch() is UTC; pin it so results are
-    # session-independent (runtime-settable conf)
+    # timestamps follows the SESSION timezone, and the DuckDB oracle's
+    # epoch() is UTC; pin it so results are session-independent
+    # (runtime-settable conf)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # naive parquet timestamp[us] (fixture format since r3) must read as
-    # TIMESTAMP, not TIMESTAMP_NTZ — unix_micros()/window arithmetic
-    # requires LTZ, and UTC session makes it equal DuckDB's epoch()
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    nano_cols = _NANO_TS_COLUMNS.get(name, ())
-    if nano_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    for c in nano_cols:
-        if dict(df.dtypes).get(c) == "bigint":
-            # integer nanos→micros division (a double intermediate would
-            # lose precision above 2^53 ns)
-            df = df.withColumn(
-                c, F.expr(f"timestamp_micros(CAST({c} DIV 1000 AS BIGINT))")
-            )
-    return df
-
-
-#: explicit schema-on-read for the CSV round-trip (SURVEY.md §1.2: the new
-#: engine declares types instead of inferring; an inferSchema pass over
-#: 100 TB of CSV would be a full extra read of the data).
-DOCUMENTS_CSV_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("text", T.StringType()),
-    T.StructField("lang", T.StringType()),
-    T.StructField("source", T.StringType()),
-    T.StructField("n_chars", T.LongType()),
-])
+    return spark.read.schema(SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
 
 
 #: repo-local scratch dir (gitignored) — the build contract forbids writes
@@ -167,7 +203,7 @@ def read_documents_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines scan with a DECLARED schema — schema inference over
     100 TB of JSON is a full extra pass; a declared schema also keeps
     field types stable when a batch happens to be all-null."""
-    return spark.read.schema(DOCUMENTS_CSV_SCHEMA).json(
+    return spark.read.schema(SCHEMAS["documents"]).json(
         documents_json_path(spark, sf_dir)
     )
 
@@ -185,7 +221,7 @@ def read_documents_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet (or strip newlines at write time) if per-file sizes are large."""
     path = documents_csv_path(spark, sf_dir)
     return (spark.read
-            .schema(DOCUMENTS_CSV_SCHEMA)
+            .schema(SCHEMAS["documents"])
             .option("header", True)
             .option("quote", '"')
             .option("escape", "\\")

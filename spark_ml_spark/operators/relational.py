@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from spark_ml_spark.functions.exact import (
     DECIMAL_TYPE,
@@ -31,6 +32,7 @@ from spark_ml_spark.functions.exact import (
     exact_sum_over,
 )
 from spark_ml_spark.io.sources import (
+    SCHEMAS,
     fixture_key,
     load,
     read_documents_csv,
@@ -82,7 +84,7 @@ def q_orc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite").orc(tmp),
     )
     return (
-        spark.read.orc(out)
+        spark.read.schema(SCHEMAS["documents"]).orc(out)
         .groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -850,8 +852,12 @@ def q_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         .partitionBy("yr")
         .parquet(tmp),
     )
+    # the partition column's type is declared too, not discovered
+    schema = T.StructType(
+        [*SCHEMAS["orders"], T.StructField("yr", T.IntegerType())]
+    )
     return (
-        spark.read.parquet(out)
+        spark.read.schema(schema).parquet(out)
         .filter(F.col("yr") == 1995)
         .groupBy(F.col("yr").cast("int").alias("yr"))
         .agg(

@@ -30,8 +30,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from spark_ml_spark.io.sources import fixture_key, load, relay
+from spark_ml_spark.io.sources import SCHEMAS, fixture_key, load, relay
 
 #: approx_percentile accuracy parameter; published rank-error bound is
 #: eps = 1/accuracy (Spark docs: ApproximatePercentile guarantees a
@@ -651,8 +652,9 @@ def _disorder_replay_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             p.coalesce(1).write.parquet(f"{tmp}/batch_{i}")
 
     out = relay("events_replay", fixture_key(sf_dir, "events"), write)
+    events = SCHEMAS["events"]
     return (
-        spark.readStream.schema("ts timestamp, event_id long")
+        spark.readStream.schema(T.StructType([events["ts"], events["event_id"]]))
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{out}/batch_*/*.parquet")
     )

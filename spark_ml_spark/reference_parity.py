@@ -34,6 +34,7 @@ import random
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from spark_ml_spark.io.sources import relay
 
@@ -45,6 +46,12 @@ RLS_COLUMNS = (
     "FID", "Key", "SurveyID", "Country", "Ecoregion", "Realm", "SiteCode",
     "Site", "SiteLat", "SiteLong", "SurveyDate", "Depth", "Phylum", "Class",
     "Family", "Taxon", "Block", "Total", "Diver", "geom",
+)
+
+#: declared, all strings as a header-only read would give them, so the
+#: scan runs no job to read the header line
+RLS_SCHEMA = T.StructType(
+    [T.StructField(c, T.StringType()) for c in RLS_COLUMNS]
 )
 
 #: vocabulary (the ``familias.txt`` stand-in): 28 known families; the data
@@ -144,7 +151,8 @@ def build_site_vectors(
     vocab = [r.family for r in fams.orderBy("vec_pos").collect()]
 
     raw = (
-        spark.read.option("header", True).option("quote", '"').csv(csv_path)
+        spark.read.schema(RLS_SCHEMA)
+        .option("header", True).option("quote", '"').csv(csv_path)
     )
     proj = raw.select(
         "SurveyID",

@@ -17,35 +17,20 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from spark_ml_spark.functions.exact import DECIMAL_TYPE, decimal_exact_sums as _exact_sql, exact_sum
+from spark_ml_spark.io.sources import SCHEMAS
 from spark_ml_spark.registry import query
-
-#: explicit schema — readStream cannot infer (and inference is a full
-#: extra pass at scale anyway). ``ts`` is stored as naive TIMESTAMP(MICROS)
-#: (fixture format since r3; earlier rounds used TIMESTAMP(NANOS), read as
-#: long + divided — that path is gone with the fixture that needed it).
-#: Declared TimestampType (LTZ): with the session pinned to UTC, watermark
-#: and window arithmetic match DuckDB's epoch() over its naive TIMESTAMP.
-EVENTS_SCHEMA = T.StructType([
-    T.StructField("event_id", T.LongType()),
-    T.StructField("ts", T.TimestampType()),
-    T.StructField("user_id", T.LongType()),
-    T.StructField("event_type", T.StringType()),
-    T.StructField("value", T.DoubleType()),
-    T.StructField("props", T.StringType()),
-])
 
 
 def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # epoch math and F.window alignment follow the session timezone; pin
     # UTC so results match the DuckDB oracle in any driver session
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # declared-schema reads don't infer, but pin the conf anyway so any
-    # batch re-read of the same files in this session agrees (LTZ)
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    # the file stream source wants a directory; glob-filter to the events
-    # table (in production this is the landing directory new files arrive in)
+    # readStream cannot infer a schema; it declares the batch reader's, so
+    # stream and batch twins see the same types. The file stream source
+    # wants a directory; glob-filter to the events table (in production
+    # this is the landing directory new files arrive in)
     return (
-        spark.readStream.schema(EVENTS_SCHEMA)
+        spark.readStream.schema(SCHEMAS["events"])
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
@@ -314,7 +299,7 @@ def q_stream_to_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    return spark.read.parquet(out)
+    return spark.read.schema(filtered.schema).parquet(out)
 
 
 @query("q_stream_sliding_window", oracle=_exact_sql("""
@@ -395,12 +380,9 @@ def q_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(8).write.mode("overwrite").parquet(tmp),
     )
 
-    schema = T.StructType([
-        T.StructField("user_id", T.LongType()),
-        T.StructField("value", T.DoubleType()),
-    ])
+    events = SCHEMAS["events"]
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(T.StructType([events["user_id"], events["value"]]))
         .option("maxFilesPerTrigger", "2")
         .parquet(src)
     )

@@ -196,18 +196,18 @@ def test_csv_multiline_roundtrip(spark, tmp_path):
     """Embedded newlines in quoted text must round-trip through the CSV
     write/read option set (ADVICE r1: without multiLine the reader
     silently splits such rows)."""
-    from spark_ml_spark.io.sources import DOCUMENTS_CSV_SCHEMA
+    from spark_ml_spark.io.sources import SCHEMAS
 
     rows = [
         (1, "line one\nline two", "en", "web", 17),
         (2, "plain", "de", "web", 5),
         (3, 'quoted "inner" and,comma', "en", "web", 24),
     ]
-    df = spark.createDataFrame(rows, DOCUMENTS_CSV_SCHEMA)
+    df = spark.createDataFrame(rows, SCHEMAS["documents"])
     out = str(tmp_path / "csv_roundtrip")
     (df.write.mode("overwrite").option("header", True)
        .option("quote", '"').option("escape", "\\").csv(out))
-    back = (spark.read.schema(DOCUMENTS_CSV_SCHEMA)
+    back = (spark.read.schema(SCHEMAS["documents"])
             .option("header", True).option("quote", '"')
             .option("escape", "\\").option("multiLine", True).csv(out))
     got = sorted([tuple(r) for r in back.collect()])
